@@ -82,6 +82,16 @@ def block_stats(addresses: DataFrame) -> DataFrame:
     )
 
 
+def dropped_blocks(addresses: DataFrame, max_block_size: int) -> DataFrame:
+    """Blocks above ``max_block_size`` rows, excluded from matching:
+    ``(block_key, block_size)`` — the metric behind "no silent caps"."""
+    return (
+        addresses.groupBy("block_key")
+        .agg(F.count(F.lit(1)).alias("block_size"))
+        .where(F.col("block_size") > max_block_size)
+    )
+
+
 def salted_pair_join(
     addresses: DataFrame,
     features: Tuple[str, ...],
@@ -96,8 +106,8 @@ def salted_pair_join(
     ``features`` is the per-side payload carried through the shuffle — every
     byte of it is paid once per replicated row, so callers should project the
     MINIMUM set their consumer reads (the fused scorer carries interned int
-    surface ids; the compositional :func:`candidate_pairs` carries the full
-    string feature set for inspectability).
+    surface ids; :func:`candidate_pairs` carries the full string feature set,
+    the inputs of the scalar scoring oracle).
 
     ``hash_block_key=True`` joins on ``xxhash64(block_key)`` (8 bytes)
     instead of the block-key string; the string is still carried once, on the
@@ -124,12 +134,9 @@ def salted_pair_join(
 
     Returns ``(pairs, dropped_blocks)``: canonical (uid_a < uid_b) pairs with
     each feature suffixed ``_a``/``_b`` (or ``_l``/``_r`` unoriented), plus
-    the oversized-block metrics table (no silent caps).
+    the :func:`dropped_blocks` metrics table (no silent caps).
     """
     sizes = addresses.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
-
-    dropped = sizes.where(F.col("block_size") > max_block_size)
-
     addr = (
         addresses.join(sizes.where(F.col("block_size") <= max_block_size), "block_key")
         .withColumn(
@@ -214,7 +221,7 @@ def salted_pair_join(
         F.greatest("uid_l", "uid_r").alias("uid_b"),
         *feature_cols,
     )
-    return pairs, dropped
+    return pairs, dropped_blocks(addresses, max_block_size)
 
 
 def candidate_pairs(
@@ -228,9 +235,10 @@ def candidate_pairs(
     Returns ``(pairs, dropped_blocks)`` where ``pairs`` carries the full
     string features of both sides (suffixed ``_a``/``_b``) and
     ``dropped_blocks`` is the metrics table of oversized blocks excluded
-    from matching. For the 10^12-pair hot path prefer
-    :func:`addressit_spark.scoring.score_pairs_fused`, which shuffles
-    interned int surface ids instead of these strings.
+    from matching. Production scoring runs
+    :func:`addressit_spark.scoring.score_pairs_fused`, which generates the
+    same pairs but shuffles interned int surface ids instead of these
+    strings; this string form feeds the scalar scoring oracle in tests.
     """
     return salted_pair_join(
         addresses,

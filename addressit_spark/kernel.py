@@ -44,7 +44,7 @@ __all__ = [
 # Lexicons
 # ---------------------------------------------------------------------------
 
-# Street-type pattern vocabulary (62 active entries; the reference disables
+# Street-type pattern vocabulary (51 active entries; the reference disables
 # COVE/END/FLAT/GARDENS/GLEN/GROVE/HEIGHTS/PARK/RIDGE/VIEW owing to suburb-name
 # collisions — /root/reference/parsers/en.js:14-17,19-81).  Order matters:
 # first matching pattern wins within a token scan.

@@ -24,7 +24,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from addressit_spark.blocking import address_table
+from addressit_spark.blocking import address_table, dropped_blocks
 from addressit_spark.cluster import cluster_members, connected_components
 from addressit_spark.checkpoint import StageStore
 from addressit_spark.parse_stage import parse_spans
@@ -50,15 +50,15 @@ class PipelineResult:
     def candidate_pair_count(self) -> int:
         """Match-count metric without a second pass over the pair volume.
 
-        Preference order: the snapshot lineage row count (pairs stage was
-        written to parquet), then the ``Observation`` collected on the same
-        execution that materialized the edges stage, then — only if the
-        fused plan never executed in this process (fully resumed run with
-        no pairs snapshot metrics) — an explicit ``count()``. At 10^12
-        pairs the first two are free; the fallback is a full pass and only
-        exists for resumed runs whose snapshots predate lineage metrics.
+        Preference order: the ``scored`` snapshot's lineage row count (one
+        row per candidate pair), then the ``Observation`` collected on the
+        same execution that materialized the edges stage, then — only if
+        the fused plan never executed in this process (fully resumed run
+        with no scored snapshot metrics) — an explicit ``count()``. At
+        10^12 pairs the first two are free; the fallback is a full pass and
+        only exists for resumed runs whose snapshots predate lineage metrics.
         """
-        rows = self.lineage.get("pairs", {}).get("rows")
+        rows = self.lineage.get("scored", {}).get("rows")
         if isinstance(rows, int):
             return rows
         if self.pair_count_obs is not None and not self.lineage.get(
@@ -78,17 +78,15 @@ def run_pipeline(
     checkpoint_dir: Optional[str] = None,
     resume: bool = True,
     input_fingerprint: str = "",
-    max_block_surfaces: "int | None | str" = "auto",
 ) -> PipelineResult:
     """Run the full ER pipeline; snapshot each stage when checkpoint_dir set.
 
-    ``max_block_surfaces`` (default ``"auto"`` → ``heavy_threshold``) caps the
-    per-block DISTINCT surface count fed to the sim-dim cross: a degenerate
-    block under the row cap can't blow up the dim stage or the broadcast sim
-    table, and its skipped pairs score via the conservative miss-low default.
+    ``heavy_threshold`` is both the pair join's salting threshold and the
+    cap on per-block DISTINCT surfaces fed to the sim-dim cross: a
+    degenerate block under the row cap can't blow up the dim stage or the
+    broadcast sim table, and its skipped pairs score via the conservative
+    miss-low default.
     """
-    if max_block_surfaces == "auto":
-        max_block_surfaces = heavy_threshold
     store = StageStore(spark, checkpoint_dir, resume=resume)
 
     def _fp(**params: object) -> str:
@@ -107,6 +105,9 @@ def run_pipeline(
         _fp(locale=locale),
     )
 
+    score_fp = _fp(
+        locale=locale, heavy_threshold=heavy_threshold, max_block_size=max_block_size
+    )
     # the (tiny) surface-similarity dim is its own snapshot stage: built
     # once, resumed from parquet, broadcast into every scoring pass. The
     # same block-size cap candidate generation applies is passed here —
@@ -117,28 +118,22 @@ def run_pipeline(
         lambda: surface_sim_map(
             addresses,
             max_block_size=max_block_size,
-            max_block_surfaces=max_block_surfaces,
+            max_block_surfaces=heavy_threshold,
         ),
-        _fp(
-            locale=locale,
-            max_block_size=max_block_size,
-            max_block_surfaces=max_block_surfaces,
-        ),
+        score_fp,
     )
 
-    dropped_holder: Dict[str, DataFrame] = {}
     obs_holder: Dict[str, Observation] = {}
 
     def _scored() -> DataFrame:
         # blocking + scoring fused: the 10^12-row salted shuffle carries
         # interned int surface ids, never the feature strings
-        sc, dropped = score_pairs_fused(
+        sc, _ = score_pairs_fused(
             addresses,
             heavy_threshold=heavy_threshold,
             max_block_size=max_block_size,
             sims=sim_dims,
         )
-        dropped_holder["dropped"] = dropped
         # candidate-pair count rides the first execution of this plan (the
         # edges materialization) as a CollectMetrics node — the match-count
         # metric never costs a second pass over the pair volume
@@ -146,64 +141,32 @@ def run_pipeline(
         obs_holder["pairs"] = obs
         return sc.observe(obs, F.count(F.lit(1)).alias("n_pairs"))
 
-    score_fp = _fp(
+    # scored is the 10^12-scale volume: fused into the edges pass (never
+    # pinned) unless a snapshot dir makes it a resume point.
+    scored = store.run("scored", _scored, score_fp, materialize=False)
+    edge_fp = _fp(
         locale=locale,
         heavy_threshold=heavy_threshold,
         max_block_size=max_block_size,
-        max_block_surfaces=max_block_surfaces,
+        tau=tau,
     )
-    # pairs/scored are the 10^12-scale volumes: fused into the scoring pass
-    # (never pinned) unless a snapshot dir makes them resume points.
-    scored = store.run("scored", _scored, score_fp, materialize=False)
-    dropped = dropped_holder.get("dropped")
-    if dropped is None:
-        # resumed run: recompute the (tiny) dropped-block metric table with
-        # the same cap scoring used, or the metric misreports what was kept
-        from addressit_spark.blocking import candidate_pairs as _cp
-
-        _, dropped = _cp(
-            addresses,
-            heavy_threshold=heavy_threshold,
-            max_block_size=max_block_size,
-        )
-
-    # the candidate-pair view (evaluation universe) is a projection of the
-    # scored stage — same fused plan, no second pair generation
-    pairs = store.run(
-        "pairs",
-        lambda: scored.select("uid_a", "uid_b", "block_key"),
-        score_fp,
-        materialize=False,
-    )
-    edges = store.run(
-        "edges", lambda: match_edges(scored, tau), _fp(
-            locale=locale,
-            heavy_threshold=heavy_threshold,
-            max_block_size=max_block_size,
-            max_block_surfaces=max_block_surfaces,
-            tau=tau,
-        )
-    )
+    edges = store.run("edges", lambda: match_edges(scored, tau), edge_fp)
     clusters = store.run(
         "clusters",
         lambda: cluster_members(connected_components(edges), addresses),
-        _fp(
-            locale=locale,
-            heavy_threshold=heavy_threshold,
-            max_block_size=max_block_size,
-            max_block_surfaces=max_block_surfaces,
-            tau=tau,
-        ),
+        edge_fp,
     )
     store.write_lineage()
 
     return PipelineResult(
         addresses=addresses,
-        pairs=pairs,
+        # the candidate-pair view (evaluation universe) is a projection of
+        # scored — same fused plan or snapshot, no second pair generation
+        pairs=scored.select("uid_a", "uid_b", "block_key"),
         scored=scored,
         edges=edges,
         clusters=clusters,
-        dropped_blocks=dropped,
+        dropped_blocks=dropped_blocks(addresses, max_block_size),
         lineage=store.lineage,
         pair_count_obs=obs_holder.get("pairs"),
     )

@@ -1,4 +1,4 @@
-"""Pairwise scoring: batched Jaro-Winkler/Levenshtein inside mapInPandas.
+"""Pairwise scoring: one fused Spark scorer plus scalar oracles.
 
 The candidate pairs arrive pre-blocked (same street name + locality soundex),
 so the discriminative features are locality spelling, house number, unit and
@@ -8,24 +8,25 @@ forms, soundex-stable locality typos — the corpus generator's axes) stay
 well above the threshold while same-block distinct entities (different house
 number) fall well below it.
 
-All scoring runs as Arrow-batched ``mapInPandas`` — the JVM↔Python transfer
-is columnar; the per-pair Jaro-Winkler kernel is pure Python over short
-strings (street/locality tokens), the same no-per-row-UDF discipline as the
-parse stage. rapidfuzz is used when importable (it is not in this container);
-the fallback implements the standard Jaro-Winkler (verified against DuckDB's
-``jaro_winkler_similarity`` in tests).
+:func:`score_pairs_fused` is the only Spark scoring path. The pair rows never
+leave the JVM: Jaro-Winkler runs once per DISTINCT surface pair as an
+Arrow-batched ``mapInArrow`` (:func:`surface_sim_map`), and the weighted sum
+is a JVM expression over a broadcast of that small table. The scalar
+functions (:func:`score_pair_py`, :func:`jaro_winkler`, :func:`levenshtein`,
+:func:`surface_sim`) are the oracles tests hold it to. rapidfuzz is used
+when importable; otherwise the fallback implements the standard
+Jaro-Winkler (verified against DuckDB's ``jaro_winkler_similarity`` in
+tests).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Union
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 try:  # pragma: no cover - not present in this container
     from rapidfuzz.distance.JaroWinkler import similarity as _rf_jw
@@ -223,44 +224,6 @@ def jaro_winkler_batch(sa: List[str], sb: List[str]) -> np.ndarray:
     return out
 
 
-def _paired_codes(
-    lo_codes: np.ndarray, hi_codes: np.ndarray, n_hi: int
-) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
-    """Unique (lo, hi) code tuples + per-row gather index.
-
-    Pairing dictionary codes arithmetically (``lo * n_hi + hi``) instead of
-    joining the strings with a separator byte means a surface containing ANY
-    byte sequence can never alias into the wrong pair — the round-2 advisor
-    found the old ``\\x01``-join could mis-split a surface containing \\x01.
-    """
-    n_hi = max(n_hi, 1)
-    pair = lo_codes.astype(np.int64) * n_hi + hi_codes.astype(np.int64)
-    uniq, gather = np.unique(pair, return_inverse=True)
-    return uniq // n_hi, uniq % n_hi, gather
-
-
-def _jw_memo(a: pd.Series, b: pd.Series) -> np.ndarray:
-    """Jaro-Winkler over two string Series with symmetric unique-pair dedup.
-
-    Within a candidate-pair batch the same (street_a, street_b) /
-    (locality_a, locality_b) string pair recurs across many rows (blocks
-    share street names by construction), and JW is symmetric — so compute
-    each unordered unique pair once and gather. factorize is O(N) hashing;
-    the kernel then runs on U ≪ N rows.
-    """
-    a = a.fillna("")
-    b = b.fillna("")
-    swap = a > b
-    lo = a.where(~swap, b)
-    hi = b.where(~swap, a)
-    lo_codes, lo_uniques = pd.factorize(lo, sort=False)
-    hi_codes, hi_uniques = pd.factorize(hi, sort=False)
-    ulo, uhi, gather = _paired_codes(lo_codes, hi_codes, len(hi_uniques))
-    ua = [lo_uniques[i] for i in ulo]
-    ub = [hi_uniques[i] for i in uhi]
-    return jaro_winkler_batch(ua, ub)[gather]
-
-
 # Composite weights: street surface 0.30, locality 0.35, number 0.25, unit 0.10.
 W_STREET, W_LOCALITY, W_NUMBER, W_UNIT = 0.30, 0.35, 0.25, 0.10
 DEFAULT_TAU = 0.87
@@ -284,7 +247,7 @@ def score_pair_py(
     unit_a: Optional[str],
     unit_b: Optional[str],
 ) -> float:
-    """Single-pair composite score — the kernel shared by Spark and tests."""
+    """Single-pair composite score — the scalar oracle of the fused scorer."""
     s = W_STREET * surface_sim(street_a or "", street_b or "")
     s += W_LOCALITY * surface_sim(locality_a or "", locality_b or "")
     s += W_NUMBER * (1.0 if (number_a or "") == (number_b or "") else 0.0)
@@ -292,24 +255,15 @@ def score_pair_py(
     return s
 
 
-SCORED_SCHEMA = StructType(
-    [
-        StructField("uid_a", StringType()),
-        StructField("uid_b", StringType()),
-        StructField("block_key", StringType()),
-        StructField("score", DoubleType()),
-    ]
-)
-
-
-def _arrow_unique_pairs(col_a, col_b) -> "tuple[List[str], List[str], np.ndarray]":
-    """Unique string pairs of two arrow columns + per-row gather index.
+def _jw_dict_memo(col_a, col_b) -> np.ndarray:
+    """Jaro-Winkler over two pyarrow string arrays via dictionary memoization.
 
     Each column is dictionary-encoded *inside Arrow* separately and the code
-    TUPLES are paired arithmetically — only the UNIQUE strings are ever
-    materialized as Python objects, and no separator byte exists for a
-    surface to alias through. Within a block all pairs share a handful of
-    street/locality surfaces, so uniques ≪ rows.
+    TUPLES are paired arithmetically (``a * n_b + b``) — only the UNIQUE
+    strings are ever materialized as Python objects, and no separator byte
+    exists for a surface to alias through (a ``\\x01``-joined key could
+    mis-split a surface containing \\x01). Within a block all pairs share a
+    handful of street/locality surfaces, so uniques ≪ rows.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -320,39 +274,16 @@ def _arrow_unique_pairs(col_a, col_b) -> "tuple[List[str], List[str], np.ndarray
             e = e.combine_chunks()
         return (
             e.dictionary.to_pylist(),
-            e.indices.to_numpy(zero_copy_only=False),
+            e.indices.to_numpy(zero_copy_only=False).astype(np.int64),
         )
 
     da, ia = enc(col_a)
     db, ib = enc(col_b)
-    ua_idx, ub_idx, gather = _paired_codes(ia, ib, len(db))
-    ua = [da[i] for i in ua_idx]
-    ub = [db[i] for i in ub_idx]
-    return ua, ub, gather
-
-
-def _jw_dict_memo(col_a, col_b) -> np.ndarray:
-    """Jaro-Winkler over two pyarrow string arrays via dictionary memoization."""
-    ua, ub, gather = _arrow_unique_pairs(col_a, col_b)
+    n_b = max(len(db), 1)
+    uniq, gather = np.unique(ia * n_b + ib, return_inverse=True)
+    ua = [da[i] for i in uniq // n_b]
+    ub = [db[i] for i in uniq % n_b]
     return jaro_winkler_batch(ua, ub)[gather]
-
-
-def _sim_dict_memo(col_a, col_b) -> np.ndarray:
-    """Hybrid ``surface_sim`` over two pyarrow string arrays, memoized.
-
-    Same dictionary-encoding trick as :func:`_jw_dict_memo`; the Levenshtein
-    term runs scalar over the UNIQUE pairs only (uniques ≪ rows within a
-    block), keeping the arrow path bit-identical to the JVM
-    ``F.levenshtein``-based factored path.
-    """
-    ua, ub, gather = _arrow_unique_pairs(col_a, col_b)
-    jw = jaro_winkler_batch(ua, ub)
-    sims = np.empty(len(ua), dtype=np.float64)
-    for i, (x, y) in enumerate(zip(ua, ub)):
-        m = max(len(x), len(y))
-        # same op order as surface_sim / the JVM column expression
-        sims[i] = max(jw[i], 1.0 - levenshtein(x, y) / m) if m else jw[i]
-    return sims[gather]
 
 
 def jw_pairs_table(pairs_of_strings: DataFrame) -> DataFrame:
@@ -380,111 +311,6 @@ def jw_pairs_table(pairs_of_strings: DataFrame) -> DataFrame:
         pairs_of_strings.sparkSession.sparkContext.defaultParallelism
     )
     return spread.mapInArrow(kernel, schema="a string, b string, jw double")
-
-
-def _num_eq_col() -> "F.Column":
-    # (number_a or "") == (number_b or "") — Python `or` folds None and ''
-    return F.coalesce(F.col("number_a"), F.lit("")) == F.coalesce(
-        F.col("number_b"), F.lit("")
-    )
-
-
-def _unit_sim_col() -> "F.Column":
-    return (
-        F.when(F.col("unit_a").isNull() & F.col("unit_b").isNull(), F.lit(1.0))
-        .when(F.col("unit_a").isNull() | F.col("unit_b").isNull(), F.lit(0.5))
-        .when(F.col("unit_a") == F.col("unit_b"), F.lit(1.0))
-        .otherwise(F.lit(0.0))
-    )
-
-
-def score_pairs(pairs: DataFrame, dims_from: Optional[DataFrame] = None) -> DataFrame:
-    """Score the candidate-pair table → (uid_a, uid_b, block_key, score).
-
-    **Surface-factored plan** (the 10^12-pair design): the expensive terms
-    — Jaro-Winkler on street and locality — depend only on the string pair,
-    and blocks repeat a handful of surfaces, so JW is computed once per
-    DISTINCT surface pair in a tiny Python job and broadcast-joined back;
-    number/unit similarity and the weighted sum are pure JVM expressions.
-    The bulk pair table never crosses into Python at all — measured
-    memory-bandwidth-bound at ~19M pairs when it did (flat scaling beyond 8
-    cores), vs a codegen'd broadcast hash join that scales linearly.
-
-    ``dims_from``: the addresses table (block_key, street_norm, locality);
-    when given, surface pairs are derived from per-block surface crosses on
-    that (already materialized) table instead of re-deriving the pair join.
-    Float semantics are bit-identical to ``score_pair_py`` (same kernel JW
-    doubles, same IEEE accumulation order).
-    """
-    # NULL surfaces must score like '' (matching score_pairs_arrow / the
-    # scalar kernel), but NULL equi-join keys never match — coalesce both
-    # the pair table's key columns and the surface dims before joining.
-    pairs = pairs.withColumns(
-        {
-            c: F.coalesce(F.col(c), F.lit(""))
-            for c in ("street_norm_a", "street_norm_b", "locality_a", "locality_b")
-        }
-    )
-    if dims_from is not None:
-        dims_from = dims_from.withColumns(
-            {
-                c: F.coalesce(F.col(c), F.lit(""))
-                for c in ("street_norm", "locality")
-            }
-        )
-        s = dims_from.select("block_key", "street_norm").distinct()
-        sd = (
-            s.select("block_key", F.col("street_norm").alias("a"))
-            .join(s.select("block_key", F.col("street_norm").alias("b")), "block_key")
-            .select("a", "b")
-            .distinct()
-        )
-        l = dims_from.select("block_key", "locality").distinct()
-        ld = (
-            l.select("block_key", F.col("locality").alias("a"))
-            .join(l.select("block_key", F.col("locality").alias("b")), "block_key")
-            .select("a", "b")
-            .distinct()
-        )
-    else:
-        sd = pairs.select(
-            F.col("street_norm_a").alias("a"), F.col("street_norm_b").alias("b")
-        ).distinct()
-        ld = pairs.select(
-            F.col("locality_a").alias("a"), F.col("locality_b").alias("b")
-        ).distinct()
-
-    def hybrid(jw_tbl: DataFrame) -> DataFrame:
-        # surface_sim = max(JW, 1 − lev/maxlen): the Levenshtein term is the
-        # built-in F.levenshtein, evaluated JVM-side on the (tiny) distinct
-        # surface-pair table — never on the bulk pair rows.
-        m = F.greatest(F.length("a"), F.length("b"))
-        lev_sim = F.lit(1.0) - F.levenshtein("a", "b") / m
-        return jw_tbl.withColumn(
-            "sim",
-            F.when(m > 0, F.greatest(F.col("jw"), lev_sim)).otherwise(F.col("jw")),
-        )
-
-    sj = hybrid(jw_pairs_table(sd)).select(
-        F.col("a").alias("street_norm_a"),
-        F.col("b").alias("street_norm_b"),
-        F.col("sim").alias("_jw_street"),
-    )
-    lj = hybrid(jw_pairs_table(ld)).select(
-        F.col("a").alias("locality_a"),
-        F.col("b").alias("locality_b"),
-        F.col("sim").alias("_jw_loc"),
-    )
-    p = pairs.join(F.broadcast(sj), ["street_norm_a", "street_norm_b"]).join(
-        F.broadcast(lj), ["locality_a", "locality_b"]
-    )
-    score = (
-        F.lit(W_STREET) * F.col("_jw_street")
-        + F.lit(W_LOCALITY) * F.col("_jw_loc")
-        + F.when(_num_eq_col(), F.lit(W_NUMBER)).otherwise(F.lit(0.0))
-        + F.lit(W_UNIT) * _unit_sim_col()
-    )
-    return p.select("uid_a", "uid_b", "block_key", score.alias("score"))
 
 
 def surface_sim_map(
@@ -636,13 +462,12 @@ def score_pairs_fused(
     salt_cap: int = 64,
     max_block_size: int = 100_000,
     sims: Optional[DataFrame] = None,
-    max_block_surfaces: "Union[int, None, str]" = "auto",
 ) -> "tuple[DataFrame, DataFrame]":
-    """Blocking + scoring fused, with interned surface ids — the hot path.
+    """Blocking + scoring fused, with interned surface ids — the one scorer.
 
-    Semantically identical to ``score_pairs(candidate_pairs(addresses)[0],
-    dims_from=addresses)`` (bit-identical scores, same pair set — asserted in
-    tests), but the 10^12-row salted shuffle carries
+    Scores the same pair set as ``candidate_pairs(addresses)``, each score
+    bit-identical to :func:`score_pair_py` on that pair's features (asserted
+    in tests), but the 10^12-row salted shuffle carries
     ``(block hash, salt, uid, street_id, locality_id, number_hash,
     unit_hash)`` — every feature an 8-byte ``xxhash64`` instead of a string,
     an 8-byte block hash as the join key, the block-key string carried once
@@ -665,30 +490,26 @@ def score_pairs_fused(
 
     ``sims``: a precomputed :func:`surface_sim_map` table (e.g. read back
     from a checkpoint snapshot, or pre-materialized so many scoring passes
-    share one build); ``None`` builds it inline in the same plan.
-
-    ``max_block_surfaces``: forwarded to the inline :func:`surface_sim_map`
-    build. The default ``"auto"`` resolves to ``heavy_threshold`` — a block
-    that is under the row cap but has a degenerate number of DISTINCT
-    surfaces (~rows² similarity pairs in the "tiny" dim stage, and a
-    broadcast sim table that is no longer tiny) skips its surface cross, and
-    its distinct-surface pairs read the conservative miss default (0.0) —
-    scores can only go DOWN, never merge clusters. ``None`` disables the cap
-    (exact full map); ignored when ``sims`` is precomputed.
+    share one build); ``None`` builds it inline in the same plan, capped at
+    ``heavy_threshold`` distinct surfaces per block: a block under the row
+    cap but with a degenerate number of DISTINCT surfaces (~rows² similarity
+    pairs in the "tiny" dim stage, and a broadcast sim table that is no
+    longer tiny) skips its surface cross, and its distinct-surface pairs read
+    the conservative miss default (0.0) — scores can only go DOWN, never
+    merge clusters. Pass ``sims=surface_sim_map(addresses)`` for the exact
+    uncapped map.
 
     Returns ``(scored, dropped_blocks)``.
     """
     from addressit_spark.blocking import salted_pair_join
 
     if sims is None:
-        if max_block_surfaces == "auto":
-            max_block_surfaces = heavy_threshold
         # the same block-size cap candidate generation applies below: sim
         # rows for dropped blocks would never be consumed
         sims = surface_sim_map(
             addresses,
             max_block_size=max_block_size,
-            max_block_surfaces=max_block_surfaces,
+            max_block_surfaces=heavy_threshold,
         )
     sj = sims.select(
         F.col("pair_key").alias("_skey"), F.col("sim").alias("_jw_street")
@@ -766,61 +587,6 @@ def score_pairs_fused(
         + F.lit(W_UNIT) * unit_sim
     )
     return p.select("uid_a", "uid_b", "block_key", score.alias("score")), dropped
-
-
-def score_pairs_arrow(pairs: DataFrame) -> DataFrame:
-    """Direct Arrow-batched scoring (every pair row through Python).
-
-    Kept as the fallback/verification path: ``mapInArrow`` with the
-    dictionary memo — correct at any scale but moves the whole pair table
-    across the JVM↔Python boundary; use :func:`score_pairs` in pipelines.
-    """
-
-    def score_batches(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            jw_street = _sim_dict_memo(
-                batch.column("street_norm_a"), batch.column("street_norm_b")
-            )
-            jw_loc = _sim_dict_memo(
-                batch.column("locality_a"), batch.column("locality_b")
-            )
-            num_a = pc.fill_null(batch.column("number_a"), "")
-            num_b = pc.fill_null(batch.column("number_b"), "")
-            num_eq = pc.equal(num_a, num_b).to_numpy(zero_copy_only=False)
-            unit_a = batch.column("unit_a")
-            unit_b = batch.column("unit_b")
-            a_null = pc.is_null(unit_a).to_numpy(zero_copy_only=False)
-            b_null = pc.is_null(unit_b).to_numpy(zero_copy_only=False)
-            unit_eq = pc.equal(
-                pc.fill_null(unit_a, ""), pc.fill_null(unit_b, "")
-            ).to_numpy(zero_copy_only=False)
-            unit_sim = np.where(
-                a_null & b_null,
-                1.0,
-                np.where(a_null | b_null, 0.5, np.where(unit_eq, 1.0, 0.0)),
-            )
-            # same accumulation order as score_pair_py → bit-identical floats
-            scores = W_STREET * jw_street
-            scores = scores + W_LOCALITY * jw_loc
-            scores = scores + np.where(num_eq, W_NUMBER, 0.0)
-            scores = scores + W_UNIT * unit_sim
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("uid_a"),
-                    batch.column("uid_b"),
-                    batch.column("block_key"),
-                    pa.array(scores, type=pa.float64()),
-                ],
-                names=["uid_a", "uid_b", "block_key", "score"],
-            )
-
-    return pairs.mapInArrow(score_batches, schema=SCORED_SCHEMA)
 
 
 def match_edges(scored: DataFrame, tau: float = DEFAULT_TAU) -> DataFrame:

@@ -17,7 +17,6 @@ from addressit_spark.scoring import (
     jaro_winkler,
     jaro_winkler_batch,
     score_pair_py,
-    score_pairs,
 )
 from addressit_spark.sources.corpus import documents_view, render_variant, synth_corpus
 
@@ -112,63 +111,134 @@ def test_score_separation():
     assert s < DEFAULT_TAU, s
 
 
-def test_surface_factored_equals_arrow_path(spark, addresses):
-    """score_pairs (broadcast-joined surface JW) == score_pairs_arrow, bitwise."""
-    from addressit_spark.scoring import score_pairs_arrow
+def _fused_scores(addresses):
+    from addressit_spark.scoring import score_pairs_fused
 
+    scored, dropped = score_pairs_fused(addresses)
+    rows = scored.collect()
+    fused = {(r["uid_a"], r["uid_b"]): (r["block_key"], r["score"]) for r in rows}
+    assert dropped.count() == 0
+    assert len(fused) == len(rows) > 0  # no pair scored twice
+    return fused
+
+
+def test_fused_equals_compositional(spark, addresses):
+    """score_pairs_fused == the compositional path: candidate_pairs' pair set
+    and block keys, each pair scored by score_pair_py — bit-identical scores
+    (``==``, no tolerance) over the whole fixture."""
+    fused = _fused_scores(addresses)
     pairs, _ = candidate_pairs(addresses)
-    pairs = pairs.localCheckpoint()
-    a = {(r["uid_a"], r["uid_b"]): r["score"] for r in score_pairs(pairs, dims_from=addresses).collect()}
-    b = {(r["uid_a"], r["uid_b"]): r["score"] for r in score_pairs_arrow(pairs).collect()}
-    assert a == b and len(a) == pairs.count()
+    comp = {
+        (p["uid_a"], p["uid_b"]): (
+            p["block_key"],
+            score_pair_py(
+                p["street_norm_a"], p["street_norm_b"],
+                p["locality_a"], p["locality_b"],
+                p["number_a"], p["number_b"],
+                p["unit_a"], p["unit_b"],
+            ),
+        )
+        for p in pairs.collect()
+    }
+    assert fused.keys() == comp.keys()
+    bad = [(k, fused[k], comp[k]) for k in comp if fused[k] != comp[k]]
+    assert not bad, bad[:5]
 
 
 def test_spark_scoring_matches_kernel(spark, addresses):
-    pairs, _ = candidate_pairs(addresses)
-    scored = score_pairs(pairs).cache()
-    sample = scored.limit(200).collect()
-    feat = {
-        (r["uid_a"], r["uid_b"]): r
-        for r in pairs.join(
-            scored.limit(200).select("uid_a", "uid_b"), ["uid_a", "uid_b"]
-        ).collect()
-    }
-    for r in sample:
-        p = feat[(r["uid_a"], r["uid_b"])]
+    """Every Spark score equals the scalar kernel score_pair_py on the two
+    uids' own address rows (not candidate_pairs' projection), so each side
+    of a hashed pair reads its own features."""
+    fused = _fused_scores(addresses)
+    feat = {r["uid"]: r for r in addresses.collect()}
+    bad = []
+    for (ua, ub), (_, score) in fused.items():
+        a, b = feat[ua], feat[ub]
         want = score_pair_py(
-            p["street_norm_a"], p["street_norm_b"],
-            p["locality_a"], p["locality_b"],
-            p["number_a"], p["number_b"],
-            p["unit_a"], p["unit_b"],
+            a["street_norm"], b["street_norm"],
+            a["locality"], b["locality"],
+            a["number"], b["number"],
+            a["unit"], b["unit"],
         )
-        assert abs(r["score"] - want) < 1e-9
+        if score != want:
+            bad.append(((ua, ub), score, want))
+    assert not bad, bad[:5]
 
 
-def test_score_pairs_null_surfaces_match_arrow(spark):
-    """NULL street/locality surfaces must score like '' in BOTH public paths.
+def test_surface_factored_equals_arrow_path(spark, addresses):
+    """The surface-factored scorer (one sim per DISTINCT surface pair, probed
+    by hash) == an unfactored per-pair path: the vectorized JW kernel run
+    over every pair's surfaces, blended with Levenshtein, bitwise."""
+    import numpy as np
 
-    The surface-factored path joins on the surface strings; NULL equi-join
-    keys never match, so without coalescing, NULL-surface pairs silently
-    vanish while score_pairs_arrow scores them as ''.
+    from addressit_spark.scoring import (
+        W_LOCALITY, W_NUMBER, W_STREET, W_UNIT, _unit_sim, levenshtein,
+    )
+
+    fused = _fused_scores(addresses)
+    pairs, _ = candidate_pairs(addresses)
+    rows = pairs.collect()
+
+    def sims(col):
+        sa = [r[col + "_a"] or "" for r in rows]
+        sb = [r[col + "_b"] or "" for r in rows]
+        jw = jaro_winkler_batch(sa, sb)
+        out = []
+        for x, y, j in zip(sa, sb, jw.tolist()):
+            m = max(len(x), len(y))
+            out.append(j if m == 0 else max(j, 1.0 - levenshtein(x, y) / m))
+        return np.array(out)
+
+    street, loc = sims("street_norm"), sims("locality")
+    bad = []
+    for r, ss, ls in zip(rows, street.tolist(), loc.tolist()):
+        want = W_STREET * ss
+        want += W_LOCALITY * ls
+        want += W_NUMBER * (1.0 if (r["number_a"] or "") == (r["number_b"] or "") else 0.0)
+        want += W_UNIT * _unit_sim(r["unit_a"], r["unit_b"])
+        key = (r["uid_a"], r["uid_b"])
+        if fused[key] != (r["block_key"], want):
+            bad.append((key, fused[key], want))
+    assert len(rows) == len(fused)
+    assert not bad, bad[:5]
+
+
+def test_fused_null_surfaces_score_as_empty(spark):
+    """NULL street/locality surfaces must score like '' and no pair vanishes.
+
+    The fused scorer keys surfaces by hash and joins the sim map on them;
+    NULL keys never match, so without coalescing to '' a NULL-surface pair
+    would read the wrong similarity or drop out of the join.
     """
-    from addressit_spark.scoring import score_pairs, score_pairs_arrow
+    from addressit_spark.scoring import score_pairs_fused
 
     rows = [
-        ("u1", "u2", "bk", None, "MAIN ST", None, "SPRINGFIELD", "1", "1", None, None),
-        ("u3", "u4", "bk", "MAIN ST", "MAIN ST", "SPRINGFIELD", None, "2", "2", "1", "1"),
-        ("u5", "u6", "bk", None, None, None, None, "3", "3", None, None),
+        ("b1", "u1", None, None, "1", None),
+        ("b1", "u2", "MAIN ST", "SPRINGFIELD", "1", None),
+        ("b2", "u3", "MAIN ST", "SPRINGFIELD", "2", "1"),
+        ("b2", "u4", "MAIN ST", None, "2", "1"),
+        ("b3", "u5", None, None, "3", None),
+        ("b3", "u6", None, None, "3", None),
     ]
     cols = (
-        "uid_a string, uid_b string, block_key string, "
-        "street_norm_a string, street_norm_b string, "
-        "locality_a string, locality_b string, "
-        "number_a string, number_b string, unit_a string, unit_b string"
+        "block_key string, uid string, street_norm string, "
+        "locality string, number string, unit string"
     )
-    pairs = spark.createDataFrame(rows, cols)
-    fact = {r["uid_a"]: r["score"] for r in score_pairs(pairs).collect()}
-    arrow = {r["uid_a"]: r["score"] for r in score_pairs_arrow(pairs).collect()}
-    assert fact == arrow
-    assert set(fact) == {"u1", "u3", "u5"}
+    empty = [(b, u, s or "", l or "", n, t) for b, u, s, l, n, t in rows]
+
+    def scores(data):
+        scored, _ = score_pairs_fused(spark.createDataFrame(data, cols))
+        return {(r["uid_a"], r["uid_b"]): r["score"] for r in scored.collect()}
+
+    got = scores(rows)
+    assert set(got) == {("u1", "u2"), ("u3", "u4"), ("u5", "u6")}
+    assert got == scores(empty)
+    by_uid = {r[1]: r for r in rows}
+    for (a, b), score in got.items():
+        ra, rb = by_uid[a], by_uid[b]
+        assert score == score_pair_py(
+            ra[2], rb[2], ra[3], rb[3], ra[4], rb[4], ra[5], rb[5]
+        ), (a, b)
 
 
 def test_levenshtein_matches_duckdb_and_spark(spark):
@@ -201,26 +271,6 @@ def test_surface_sim_hybrid_properties():
     )
     assert surface_sim("", "") == 0.0
     assert surface_sim("ABC", "ABC") == 1.0
-
-
-def test_fused_equals_compositional(spark, addresses):
-    """score_pairs_fused == score_pairs(candidate_pairs(...), dims_from=...),
-    same pair set and bit-identical scores."""
-    from addressit_spark.scoring import score_pairs_fused
-
-    pairs, _ = candidate_pairs(addresses)
-    comp = {
-        (r["uid_a"], r["uid_b"]): (r["block_key"], r["score"])
-        for r in score_pairs(pairs, dims_from=addresses).collect()
-    }
-    scored, dropped = score_pairs_fused(addresses)
-    fused = {
-        (r["uid_a"], r["uid_b"]): (r["block_key"], r["score"])
-        for r in scored.collect()
-    }
-    assert dropped.count() == 0
-    assert fused == comp
-    assert len(fused) > 0
 
 
 def test_fused_with_precomputed_sims_identical(spark, addresses):
@@ -336,11 +386,11 @@ def test_surface_sim_map_salted_cross_exact(spark):
 
 def test_fused_degenerate_surface_block_capped_by_default(spark):
     """A block under the row cap but with degenerate DISTINCT-surface count
-    must not build its surface cross: score_pairs_fused defaults
-    max_block_surfaces to heavy_threshold, and the skipped pairs read the
-    conservative miss-low default (equal surfaces still 1.0)."""
+    must not build its surface cross: score_pairs_fused caps its inline sim
+    map at heavy_threshold distinct surfaces per block, and the skipped
+    pairs read the conservative miss-low default (equal surfaces still 1.0)."""
     from addressit_spark.scoring import (
-        W_LOCALITY, W_NUMBER, W_UNIT, score_pairs_fused,
+        W_LOCALITY, W_NUMBER, W_UNIT, score_pairs_fused, surface_sim_map,
     )
 
     rows = [
@@ -360,10 +410,10 @@ def test_fused_degenerate_surface_block_capped_by_default(spark):
     # equal → diagonal short-circuit 1.0; number equal; unit both-null 1.0
     expect = W_LOCALITY + W_NUMBER + W_UNIT
     assert all(abs(s - expect) < 1e-12 for s in got.values())
-    # explicit opt-out restores the exact map: distinct street pairs now
-    # score their true (sub-1.0) surface sims — every score strictly higher
+    # the exact (uncapped) map: distinct street pairs now score their true
+    # (sub-1.0) surface sims — every score strictly higher
     exact, _ = score_pairs_fused(
-        addrs, heavy_threshold=2, salt_cap=4, max_block_surfaces=None
+        addrs, heavy_threshold=2, salt_cap=4, sims=surface_sim_map(addrs)
     )
     got_exact = {(r["uid_a"], r["uid_b"]): r["score"] for r in exact.collect()}
     assert got_exact.keys() == got.keys()
@@ -375,20 +425,15 @@ def test_memo_pairs_with_separator_bytes():
 
     Round-2 advisor finding: the memoized kernels joined pair keys with
     \\x01 and split on the FIRST occurrence, so a surface containing \\x01
-    decoded into the wrong (a, b) pair.
+    decoded into the wrong (a, b) pair. The production memo behind the sim
+    map pairs dictionary codes instead.
     """
-    import pandas as pd
     import pyarrow as pa
 
-    from addressit_spark.scoring import (
-        _jw_memo, _sim_dict_memo, jaro_winkler, surface_sim,
-    )
+    from addressit_spark.scoring import _jw_dict_memo, jaro_winkler
 
     a = ["A\x01B", "A", "X\x01", "", "MAIN ST"]
     b = ["C", "\x01BC", "\x01Y", "\x01", "MAIN\x01ST"]
-    got_sim = _sim_dict_memo(pa.array(a), pa.array(b))
+    got = _jw_dict_memo(pa.array(a), pa.array(b))
     for i, (x, y) in enumerate(zip(a, b)):
-        assert got_sim[i] == surface_sim(x, y), (x, y)
-    got_jw = _jw_memo(pd.Series(a), pd.Series(b))
-    for i, (x, y) in enumerate(zip(a, b)):
-        assert got_jw[i] == jaro_winkler(*sorted((x, y))), (x, y)
+        assert got[i] == jaro_winkler(x, y), (x, y)

@@ -128,35 +128,39 @@ def test_candidate_pair_count_via_observation(result):
     """The match-count metric must equal an explicit count of the pair view
     without re-running the fused plan: with no snapshot dir it comes from
     the Observation collected on the edges materialization."""
-    assert result.lineage.get("pairs", {}).get("rows") is None
+    assert result.lineage.get("scored", {}).get("rows") is None
     assert result.pair_count_obs is not None
     assert result.candidate_pair_count() == result.pairs.count()
 
 
 def test_candidate_pair_count_snapshot_and_resume(spark, corpus, tmp_path):
-    """With a snapshot dir the metric reads the pairs stage lineage (fresh
+    """With a snapshot dir the metric reads the scored stage lineage (fresh
     AND resumed runs) — never a recount of the pair volume."""
     ckpt = str(tmp_path / "ckpt")
     docs = documents_view(corpus)
     r1 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
     n = r1.pairs.count()
-    assert r1.lineage["pairs"]["rows"] == n
+    assert r1.lineage["scored"]["rows"] == n
     assert r1.candidate_pair_count() == n
     r2 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
-    assert r2.lineage["pairs"]["resumed"] is True
+    assert r2.lineage["scored"]["resumed"] is True
     assert r2.candidate_pair_count() == n
 
 
 def test_checkpoint_resume(spark, corpus, tmp_path):
-    ckpt = str(tmp_path / "ckpt")
+    stages = {"addresses", "sim_dims", "scored", "edges", "clusters"}
+    ckpt = tmp_path / "ckpt"
     docs = documents_view(corpus)
-    r1 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
+    r1 = run_pipeline(spark, docs, checkpoint_dir=str(ckpt))
     n1 = r1.clusters.count()
     assert r1.lineage["clusters"]["resumed"] is False
+    # one snapshot per stage, none a projection of another
+    assert {p.name for p in ckpt.iterdir() if p.is_dir()} == stages
+    assert set(r1.lineage) == stages
     # second run resumes every stage from its snapshot
-    r2 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
-    assert r2.lineage["addresses"]["resumed"] is True
-    assert r2.lineage["clusters"]["resumed"] is True
+    r2 = run_pipeline(spark, docs, checkpoint_dir=str(ckpt))
+    assert set(r2.lineage) == stages
+    assert all(m["resumed"] is True for m in r2.lineage.values())
     assert r2.clusters.count() == n1
     got1 = dict((r["uid"], r["component"]) for r in r1.clusters.collect())
     got2 = dict((r["uid"], r["component"]) for r in r2.clusters.collect())
