@@ -8,12 +8,17 @@ The north_rule dataflow over the input_hint table shape::
       ──triangle-salted slim self-join──► scored pairs ≥ τ
         (interned int surface ids in the shuffle; Jaro-Winkler/Levenshtein
          computed once per distinct surface pair, broadcast back)
-      ──large-star/small-star CC──► clusters          (localCheckpoint rounds)
+      ──connected components──► clusters
+        (driver union-find up to 2^20 edges; above that,
+         large-star/small-star localCheckpoint rounds)
 
 Shuffle inventory (what the plan pays at 10^12 docs): 1 for block sizes,
 1 for the salted pair join (slim int payloads), 1 per CC round
-(log-bounded), 1 for the final label agg. Parse and scoring are
-shuffle-free map stages; the surface-sim dims are tiny broadcasts.
+(log-bounded) and 1 for the final label agg. The CC rounds and label agg
+run only above the local-finish cap; at or below it, CC is one
+single-partition limit exchange that pulls the edges to the driver. Parse
+and scoring are shuffle-free map stages; the surface-sim dims are tiny
+broadcasts.
 """
 
 from __future__ import annotations

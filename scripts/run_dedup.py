@@ -3,9 +3,10 @@
 
 The LLM-data twin of ``run_er.py``: runs the three portable near-dup
 detectors over a documents table, takes the ≥N-vote consensus, clusters it
-through the large-star/small-star CC kernel, picks one survivor per cluster
-(min-id canonical or quality-aware argmax), and writes the post-dedup
-training manifest (train/val/test splits × lang, doc + token totals).
+through the connected-components kernel (``cluster.py``), picks one
+survivor per cluster (min-id canonical or quality-aware argmax), and writes
+the post-dedup training manifest (train/val/test splits × lang, doc + token
+totals).
 
 Cluster usage::
 

@@ -133,11 +133,16 @@ def main() -> None:
         eff_trials.append(round(d_n / (4 * d_4), 4))
     eff_marginal = sorted(eff_trials)[len(eff_trials) // 2]
     # Best-of marginal: deltas of the per-level best times — the same
-    # best-of the table reports. Noisy-neighbor interference only ever
-    # slows a trial down (never speeds it up), so best-of is the
-    # least-biased point estimate each level admits.
-    eff_marginal_best = round((best(big, 1) - best(small, 1))
-                              / (4 * (best(big, 4) - best(small, 4))), 4)
+    # best-of the table reports. A sensitivity check only: the min over
+    # trials biases each level's time downward by a variance-dependent
+    # amount, so the ratio is not unbiased. None when the 4N delta is not
+    # positive (no meaningful ratio).
+    d_best_4 = best(big, 4) - best(small, 4)
+    eff_marginal_best = (
+        round((best(big, 1) - best(small, 1)) / (4 * d_best_4), 4)
+        if d_best_4 > 0
+        else None
+    )
     report = {
         "metric": "spark-submit --py-files deployment proof (full ER pipeline)",
         "sizes": SIZES,
@@ -189,11 +194,12 @@ def main() -> None:
         f"* **Marginal efficiency (Δtime between the two sizes, paired "
         f"within each interleaved trial): median {eff_marginal}, per-trial "
         f"{eff_trials}** — fixed per-job cost cancelled, the rate that "
-        f"governs production scale.",
-        f"* **Best-of marginal efficiency (deltas of the per-level best "
-        f"times, matching the table's best-of columns): "
-        f"{eff_marginal_best}** — host interference is one-sided (it only "
-        f"slows runs), so the best-of deltas are the cleanest estimate.",
+        f"governs production scale. This is the headline figure.",
+        f"* Sensitivity check, not a headline: best-of marginal efficiency "
+        f"(deltas of the per-level best times, matching the table's best-of "
+        f"columns) is {eff_marginal_best}. Differencing per-level minima "
+        f"biases each level's time downward by a variance-dependent amount, "
+        f"so it is not an unbiased estimate.",
         "* Output counts (addresses, candidate pairs, match edges, clusters)",
         "  asserted equal across cluster sizes — parallelism does not change",
         "  the answer.",

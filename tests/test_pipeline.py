@@ -63,6 +63,14 @@ def test_connected_components_vs_union_find(spark, result):
     assert got == expected
 
 
+def _path_edges(spark, n):
+    """The n-node path n00000000 — n00000001 — … as an edge list."""
+    return spark.range(n - 1).select(
+        F.format_string("n%08d", F.col("id")).alias("src"),
+        F.format_string("n%08d", F.col("id") + 1).alias("dst"),
+    )
+
+
 def test_cc_round_count_contract_on_path_graph(spark):
     """Worst-case convergence contract: large-star/small-star must cluster a
     PATH graph (the pathological long-diameter case; blocking-derived graphs
@@ -72,15 +80,10 @@ def test_cc_round_count_contract_on_path_graph(spark):
     always-paid final no-change round."""
     import math
 
-    from pyspark.sql import functions as F
-
     for n in (64, 512):
-        edges = spark.range(n - 1).select(
-            F.format_string("n%08d", F.col("id")).alias("src"),
-            F.format_string("n%08d", F.col("id") + 1).alias("dst"),
-        )
+        edges = _path_edges(spark, n)
         log = []
-        out = connected_components(edges, round_log=log)
+        out = connected_components(edges, round_log=log, local_edges=0)
         assert out.select("component").distinct().count() == 1
         assert out.count() == n
         bound = math.ceil(math.log2(n)) + 2
@@ -102,10 +105,71 @@ def test_star_forest_check_rejects_disjoint_path(spark):
     assert not _is_star_forest(chain)
     star = spark.createDataFrame([("a", "b"), ("a", "c")], ["src", "dst"])
     assert _is_star_forest(star)
-    # end-to-end: the non-star inputs still cluster correctly
+    # end-to-end: the non-star inputs still cluster correctly through the
+    # distributed rounds (the local finish would never reach the shape test)
     for df in (path, chain):
-        out = {r["uid"]: r["component"] for r in connected_components(df).collect()}
+        out = {
+            r["uid"]: r["component"]
+            for r in connected_components(df, local_edges=0).collect()
+        }
         assert out == {"a": "a", "b": "a", "c": "a"}
+
+
+def test_cc_raises_without_fixpoint(spark):
+    """Exhausting max_rounds must raise, never label a non-fixpoint edge
+    set: a 64-node path needs ~7 rounds, so one round cannot converge."""
+    edges = _path_edges(spark, 64)
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        connected_components(edges, local_edges=0, max_rounds=1)
+
+
+def test_local_finish_equals_distributed(spark):
+    """The driver-side union-find must give exactly the labels of the
+    distributed large-star/small-star path (``local_edges=0``) — same
+    nodes, same min-uid components, same column names and types."""
+    import random
+
+    def both(df, **kw):
+        log = []
+        local = connected_components(df, round_log=log, **kw)
+        dist = connected_components(df, local_edges=0)
+        assert local.dtypes == dist.dtypes
+        got = {(r["uid"], r["component"]) for r in local.collect()}
+        assert got == {(r["uid"], r["component"]) for r in dist.collect()}
+        return got, log
+
+    # seeded random graphs: self-loops, duplicate and reversed edges, a
+    # node whose only edge is a self-loop, NULL endpoints
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+        rows = [
+            ("u%03d" % rng.randrange(300), "u%03d" % rng.randrange(300))
+            for _ in range(220)
+        ]
+        rows += rows[:15] + [(d, s) for s, d in rows[15:40]]
+        rows += [("u007", "u007"), ("solo", "solo"), (None, "u001"), ("u002", None)]
+        got, log = both(spark.createDataFrame(rows, "src string, dst string"))
+        assert log == [0]
+        assert "solo" not in {u for u, _ in got}
+        longs = [(rng.randrange(400), rng.randrange(400)) for _ in range(250)]
+        both(spark.createDataFrame(longs, "src long, dst long"))
+
+    # path graphs: the long-diameter worst case for the distributed rounds
+    for n in (64, 512):
+        got, _ = both(_path_edges(spark, n))
+        assert {c for _, c in got} == {"n00000000"} and len(got) == n
+
+    # exactly at the cap runs locally; one edge past it runs the rounds
+    rows = [("c%02d" % i, "c%02d" % (i + 1)) for i in range(9)] + [("x", "y")]
+    df = spark.createDataFrame(rows, "src string, dst string")
+    _, log = both(df, local_edges=10)
+    assert log == [0]
+    _, log = both(df, local_edges=9)
+    assert log[0] > 0
+
+    # the empty edge set: 0 rows, same schema
+    got, _ = both(spark.createDataFrame([], "src string, dst string"))
+    assert got == set()
 
 
 def test_pairwise_f1_at_least_099(spark, corpus, result):
@@ -211,6 +275,15 @@ def test_incremental_components_equals_full_recompute(spark, result):
         for r in connected_components(result.edges.select("src", "dst")).collect()
     }
     assert inc == full
+    # and against the independent reference: the distributed rounds over
+    # the whole edge set (both sides above take the local finish)
+    ref = {
+        (r["uid"], r["component"])
+        for r in connected_components(
+            result.edges.select("src", "dst"), local_edges=0
+        ).collect()
+    }
+    assert inc == ref
     # the split genuinely exercised cross-batch merges (otherwise the test
     # degenerates to relabeling): some prior component must have changed
     prev_map = {r["uid"]: r["component"] for r in prev.collect()}
