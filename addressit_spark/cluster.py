@@ -3,25 +3,30 @@
 :func:`connected_components` has two paths with one output contract,
 ``(uid, component)`` with component = the component's min uid:
 
-* **Local finish** (edge sets of at most ``local_edges``, default 2^20
-  edges — every edge set at bench sizes and the typical incremental fold).
-  One job pulls the non-self-loop edges to the driver through Arrow, a
+* **Local finish** (edge sets of at most ``LOCAL_EDGES`` = 2^20 edges —
+  every edge set at bench sizes and the typical incremental fold). One
+  job with no shuffle pulls at most ``LOCAL_EDGES + 1`` non-self-loop
+  edges to the driver through Arrow; if they all came back, a
   path-halving union-find labels them (the smaller root always wins, so
-  each root is its component's min uid), and the labels come back through
-  an Arrow ``createDataFrame``. This is the "finish in memory" step of the
-  log-round CC line of work ("Finding connected components in map-reduce
-  in logarithmic rounds", ICDE 2013; Kiveris et al.): at small sizes the
-  distributed rounds cost ~30 jobs of fixed overhead for a graph one
-  process labels in milliseconds. Driver memory at the default cap: the
-  union-find over 2^20 random edges of 16-character uids held ~310 MB of
-  Python objects (input lists included), plus the Arrow transfer buffers.
-* **Distributed** (larger edge sets, or ``local_edges=0``): the
+  each root is its component's min uid), and the labels come back
+  through an Arrow ``createDataFrame``. This is the
+  "finish in memory" step of the log-round CC line of work ("Finding
+  connected components in map-reduce in logarithmic rounds", ICDE 2013;
+  Kiveris et al.): at small sizes the distributed rounds cost ~30 jobs of
+  fixed overhead for a graph one process labels in milliseconds. Driver
+  memory at the cap: the union-find over 2^20 random edges of 16-character
+  uids held ~310 MB of Python objects (input lists included), plus the
+  Arrow transfer buffers.
+* **Distributed** (:func:`_distributed_components`, larger edge sets): the
   alternating large-star/small-star algorithm of Kiveris et al.,
   "Connected Components in MapReduce and Beyond" — O(log² n) rounds, in
   practice 2-4 for blocking-derived near-clique graphs. Pure DataFrame
   joins + aggregations (no GraphX, no ``collect_list`` of neighborhoods,
   so a single giant component cannot OOM one task). The path stays the
   one used at scale and the reference the local finish is tested against.
+  It pays the probe first, a bounded cost: on 1.5M string edges in 4
+  partitions (local[4], 4-core host) the probe took 2.5-2.8 s and
+  shuffled nothing.
 
 * large-star(u): m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u
 * small-star(u): over Γ≤(u) = {v ∈ Γ(u): v ≤ u}: m = min(Γ≤(u) ∪ {u});
@@ -196,20 +201,23 @@ def _union_find_labels(src: list, dst: list) -> "tuple[list, list]":
     return uids, [find(u) for u in uids]
 
 
-def _local_components(
-    edges: DataFrame, local_edges: int
-) -> Optional[DataFrame]:
-    """Label ``edges`` on the driver if it has at most ``local_edges``
-    non-self-loop edges, else None. One job: at most ``local_edges + 1``
-    rows come back through Arrow, and the labels return the same way.
+def _local_components(edges: DataFrame, cap: int) -> Optional[DataFrame]:
+    """Label ``edges`` on the driver if it has at most ``cap`` non-self-loop
+    edges, else None.
 
-    Self-loops and NULL endpoints are dropped before the limit, exactly as
+    One job pulls at most ``cap + 1`` edges through Arrow. ``coalesce(1)``
+    puts the limit on a single partition, so the collect needs no exchange
+    and its one task stops reading after ``cap + 1`` edges: above the cap
+    the probe costs that serial read and pull, whatever the size of the
+    edge set, and shuffles nothing. The labels return through Arrow too.
+
+    Self-loops and NULL endpoints are dropped before the probe, exactly as
     the distributed path drops them, so a node whose only edge is a
     self-loop is absent from both outputs.
     """
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
-    pdf = e.limit(local_edges + 1).toPandas()
-    if len(pdf) > local_edges:
+    pdf = e.coalesce(1).limit(cap + 1).toPandas()
+    if len(pdf) > cap:
         return None
     uids, comps = _union_find_labels(pdf["src"].tolist(), pdf["dst"].tolist())
     node = e.schema["src"].dataType
@@ -225,7 +233,6 @@ def connected_components(
     edges: DataFrame,
     max_rounds: int = 48,
     round_log: Optional[list] = None,
-    local_edges: int = LOCAL_EDGES,
 ) -> DataFrame:
     """(src, dst) edge list → (uid, component) with component = min uid.
 
@@ -233,32 +240,43 @@ def connected_components(
     callers union isolated nodes with ``component = uid`` (see pipeline).
     ``uid`` and ``component`` keep the type of the ``src`` column.
 
-    Edge sets of at most ``local_edges`` non-self-loop edges (default
-    2^20) are labelled on the driver by :func:`_local_components`: one job
-    pulls them through Arrow, a union-find labels them, and no round runs
-    — ``round_log`` gets 0. At the default cap that holds up to ~2M uid
-    values plus the parent map in driver memory (~310 MB for 16-character
-    uids).
-    ``local_edges=0`` skips the probe and always runs the distributed
-    large-star/small-star iteration; a larger edge set runs it after the
-    probe (one extra job, at most ``local_edges + 1`` rows pulled).
+    Edge sets of at most ``LOCAL_EDGES`` non-self-loop edges (2^20) are
+    labelled on the driver by :func:`_local_components`: one Arrow pull,
+    a union-find, and no round — ``round_log`` gets 0. At the cap that
+    holds up to ~2M uid values plus the parent map in driver memory
+    (~310 MB for 16-character uids). A larger edge set pays the probe (one
+    job that reads and pulls ``LOCAL_EDGES + 1`` edges in one task, no
+    shuffle) and then runs :func:`_distributed_components`.
 
-    ``round_log`` (optional): the number of executed large-star/small-star
-    rounds is appended to it — the observable for the O(log² n) worst-case
-    contract test. Each round costs one job via
-    :func:`_checkpoint_with_fingerprint`; once a round leaves the edge
-    count unchanged, the star-forest shape test (:func:`_is_star_forest`)
-    replaces the full confirmation round the checksum fixpoint would pay.
-    If ``max_rounds`` (default 48 ≥ ⌈log₂ 10^12⌉ + 2) pass without a
-    fixpoint, raises ``RuntimeError`` rather than label a non-fixpoint
-    edge set.
+    ``round_log`` and ``max_rounds`` apply to the distributed rounds; see
+    :func:`_distributed_components`.
     """
-    if local_edges > 0:
-        local = _local_components(edges, local_edges)
-        if local is not None:
-            if round_log is not None:
-                round_log.append(0)
-            return local
+    local = _local_components(edges, LOCAL_EDGES)
+    if local is None:
+        return _distributed_components(edges, max_rounds, round_log)
+    if round_log is not None:
+        round_log.append(0)
+    return local
+
+
+def _distributed_components(
+    edges: DataFrame,
+    max_rounds: int = 48,
+    round_log: Optional[list] = None,
+) -> DataFrame:
+    """The large-star/small-star rounds: the :func:`connected_components`
+    path above ``LOCAL_EDGES``, and the reference the local finish is
+    tested against. Same input and output contract.
+
+    ``round_log`` (optional): the number of executed rounds is appended to
+    it — the observable for the O(log² n) worst-case contract test. Each
+    round costs one job via :func:`_checkpoint_with_fingerprint`; once a
+    round leaves the edge count unchanged, the star-forest shape test
+    (:func:`_is_star_forest`) replaces the full confirmation round the
+    checksum fixpoint would pay. If ``max_rounds`` (default 48 ≥
+    ⌈log₂ 10^12⌉ + 2) pass without a fixpoint, raises ``RuntimeError``
+    rather than label a non-fixpoint edge set.
+    """
     ids = _node_ids(edges)
     # translate the edge list to 8-byte ids once; every iterated shuffle
     # after this moves 16-byte rows instead of two uid strings

@@ -15,10 +15,10 @@ The north_rule dataflow over the input_hint table shape::
 Shuffle inventory (what the plan pays at 10^12 docs): 1 for block sizes,
 1 for the salted pair join (slim int payloads), 1 per CC round
 (log-bounded) and 1 for the final label agg. The CC rounds and label agg
-run only above the local-finish cap; at or below it, CC is one
-single-partition limit exchange that pulls the edges to the driver. Parse
-and scoring are shuffle-free map stages; the surface-sim dims are tiny
-broadcasts.
+run only above the local-finish cap. CC first pulls at most 2^20 + 1
+edges to the driver in one single-partition task with no exchange; at or
+below the cap that pull is all of CC's Spark work. Parse and scoring are
+shuffle-free map stages; the surface-sim dims are tiny broadcasts.
 """
 
 from __future__ import annotations

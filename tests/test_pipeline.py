@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from addressit_spark.cluster import (
+    _distributed_components,
     cluster_members,
     connected_components,
     incremental_components,
@@ -83,7 +84,7 @@ def test_cc_round_count_contract_on_path_graph(spark):
     for n in (64, 512):
         edges = _path_edges(spark, n)
         log = []
-        out = connected_components(edges, round_log=log, local_edges=0)
+        out = _distributed_components(edges, round_log=log)
         assert out.select("component").distinct().count() == 1
         assert out.count() == n
         bound = math.ceil(math.log2(n)) + 2
@@ -110,7 +111,7 @@ def test_star_forest_check_rejects_disjoint_path(spark):
     for df in (path, chain):
         out = {
             r["uid"]: r["component"]
-            for r in connected_components(df, local_edges=0).collect()
+            for r in _distributed_components(df).collect()
         }
         assert out == {"a": "a", "b": "a", "c": "a"}
 
@@ -120,19 +121,21 @@ def test_cc_raises_without_fixpoint(spark):
     set: a 64-node path needs ~7 rounds, so one round cannot converge."""
     edges = _path_edges(spark, 64)
     with pytest.raises(RuntimeError, match="max_rounds=1"):
-        connected_components(edges, local_edges=0, max_rounds=1)
+        _distributed_components(edges, max_rounds=1)
 
 
-def test_local_finish_equals_distributed(spark):
+def test_local_finish_equals_distributed(spark, monkeypatch):
     """The driver-side union-find must give exactly the labels of the
-    distributed large-star/small-star path (``local_edges=0``) — same
-    nodes, same min-uid components, same column names and types."""
+    distributed large-star/small-star path (``_distributed_components``) —
+    same nodes, same min-uid components, same column names and types."""
     import random
 
-    def both(df, **kw):
+    from addressit_spark import cluster
+
+    def both(df):
         log = []
-        local = connected_components(df, round_log=log, **kw)
-        dist = connected_components(df, local_edges=0)
+        local = connected_components(df, round_log=log)
+        dist = _distributed_components(df)
         assert local.dtypes == dist.dtypes
         got = {(r["uid"], r["component"]) for r in local.collect()}
         assert got == {(r["uid"], r["component"]) for r in dist.collect()}
@@ -159,17 +162,19 @@ def test_local_finish_equals_distributed(spark):
         got, _ = both(_path_edges(spark, n))
         assert {c for _, c in got} == {"n00000000"} and len(got) == n
 
-    # exactly at the cap runs locally; one edge past it runs the rounds
-    rows = [("c%02d" % i, "c%02d" % (i + 1)) for i in range(9)] + [("x", "y")]
-    df = spark.createDataFrame(rows, "src string, dst string")
-    _, log = both(df, local_edges=10)
-    assert log == [0]
-    _, log = both(df, local_edges=9)
-    assert log[0] > 0
-
     # the empty edge set: 0 rows, same schema
     got, _ = both(spark.createDataFrame([], "src string, dst string"))
     assert got == set()
+
+    # exactly at the cap runs locally; one edge past it runs the rounds
+    rows = [("c%02d" % i, "c%02d" % (i + 1)) for i in range(9)] + [("x", "y")]
+    df = spark.createDataFrame(rows, "src string, dst string")
+    monkeypatch.setattr(cluster, "LOCAL_EDGES", 10)
+    _, log = both(df)
+    assert log == [0]
+    monkeypatch.setattr(cluster, "LOCAL_EDGES", 9)
+    _, log = both(df)
+    assert log[0] > 0
 
 
 def test_pairwise_f1_at_least_099(spark, corpus, result):
@@ -279,8 +284,8 @@ def test_incremental_components_equals_full_recompute(spark, result):
     # the whole edge set (both sides above take the local finish)
     ref = {
         (r["uid"], r["component"])
-        for r in connected_components(
-            result.edges.select("src", "dst"), local_edges=0
+        for r in _distributed_components(
+            result.edges.select("src", "dst")
         ).collect()
     }
     assert inc == ref
