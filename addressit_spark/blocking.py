@@ -16,11 +16,14 @@ key cannot pin a single reducer at 10^12-doc scale:
   spans exactly once per bucket pair — cross-bucket pairs once by
   construction, same-bucket pairs deduped by the ``uid_l < uid_r`` rule.
 
-The salted pair set provably equals the unsalted self-join pair set (tested
-at small scale), while the shuffle key ``(block, lo, hi)`` spreads a block of
-c rows over ~S(S+1)/2 reducers. Replication cost is S+1 rows per input row,
-bounded by ``salt_cap``. Blocks above ``max_block_size`` are *dropped with a
-logged metric* (no silent caps): at 10^12 docs a million-row block means a
+:func:`salted_pair_join` is the one such join on the ER path: candidate
+pairs, the fused scorer and the sim map's per-block surface cross
+(``scoring.surface_sim_map``) all run through it. The salted pair set
+provably equals the unsalted self-join pair set (tested at small scale),
+while the shuffle key ``(block, lo, hi)`` spreads a block of c rows over
+~S(S+1)/2 reducers. Replication cost is S+1 rows per input row, bounded by
+``salt_cap``. Blocks above ``max_block_size`` are *dropped with a logged
+metric* (no silent caps): at 10^12 docs a million-row block means a
 degenerate key, not signal.
 """
 
@@ -32,13 +35,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# the columns ``parse_stage.parse_spans`` emits for every span
+_SPAN_COLUMNS = ("doc_id", "pos", "kind", "text", "media_ref", "offset", "address")
+
+
 def address_table(parsed_spans: DataFrame) -> DataFrame:
     """Project parsed text spans to the normalized address-feature table.
 
     Keeps only spans that produced both a street and a locality — the
     minimum signal the blocking key needs. ``uid`` is a stable span identity
     (doc_id#pos) used for pair ordering and cluster node identity.
+    Document-level metadata columns that ``explode_spans`` passed through
+    (e.g. the streaming surface's ``ingest_ts``) pass through here too,
+    after ``locality``.
     """
+    extra = [c for c in parsed_spans.columns if c not in _SPAN_COLUMNS]
     a = parsed_spans.where(
         (F.col("kind") == "text")
         & F.col("address.street").isNotNull()
@@ -62,6 +73,7 @@ def address_table(parsed_spans: DataFrame) -> DataFrame:
         F.col("address.number").alias("number"),
         F.col("address.unit").alias("unit"),
         F.upper(F.element_at("address.regions", 1)).alias("locality"),
+        *extra,
     ).withColumn(
         "block_key",
         F.concat_ws("|", F.col("street_name"), F.soundex(F.col("locality"))),
@@ -98,26 +110,25 @@ def salted_pair_join(
     heavy_threshold: int = 256,
     salt_cap: int = 64,
     max_block_size: int = 100_000,
-    hash_block_key: bool = False,
-    orient: bool = True,
 ) -> Tuple[DataFrame, DataFrame]:
     """The triangle-salted within-block self-join core.
 
-    ``features`` is the per-side payload carried through the shuffle — every
-    byte of it is paid once per replicated row, so callers should project the
-    MINIMUM set their consumer reads (the fused scorer carries interned int
-    surface ids; :func:`candidate_pairs` carries the full string feature set,
-    the inputs of the scalar scoring oracle).
+    ``addresses`` needs ``block_key`` and ``uid`` columns; ``features`` is
+    the per-side payload carried through the shuffle — every byte of it is
+    paid once per replicated row, so callers should project the MINIMUM set
+    their consumer reads (the fused scorer carries interned int surface ids;
+    :func:`candidate_pairs` carries the full string feature set, the inputs
+    of the scalar scoring oracle; the sim map's surface cross carries none).
 
-    ``hash_block_key=True`` joins on ``xxhash64(block_key)`` (8 bytes)
-    instead of the block-key string; the string is still carried once, on the
-    left side only, for the output. A 64-bit block-hash collision merges two
-    blocks' candidate spaces — at 10⁹ distinct blocks the expected number of
-    colliding block *pairs* is ~0.03, and the consequence is a few extra
-    scored pairs, not lost pairs. Those cross-block pairs score LOW because
-    the fused scorer defaults a sim-map miss on distinct surfaces to 0.0
-    (``scoring.score_pairs_fused``'s miss policy) — so the collision trade
-    is extra work, never wrongly merged clusters.
+    The join key is ``xxhash64(block_key)`` (8 bytes); the block-key string
+    is carried once, on the left side only, for the output. A 64-bit
+    block-hash collision merges two blocks' candidate spaces — at 10⁹
+    distinct blocks the expected number of colliding block *pairs* is
+    ~0.03, and the consequence is a few extra scored pairs, not lost pairs.
+    Those cross-block pairs score LOW because the fused scorer defaults a
+    sim-map miss on distinct surfaces to 0.0 (``scoring.score_pairs_fused``'s
+    miss policy) — so the collision trade is extra work, never wrongly
+    merged clusters.
 
     The same-bucket dedup filter compares an 8-byte ``xxhash64(uid)`` order
     first and falls back to the uid strings only on a hash tie (probability
@@ -127,14 +138,12 @@ def salted_pair_join(
     for consumers that don't project them — the strings are needed for the
     canonical ``uid_a``/``uid_b`` output anyway.
 
-    ``orient=False`` skips the per-feature canonical-orientation ``when``s
-    and emits raw ``_l``/``_r`` feature columns — correct whenever the
-    consumer's scoring expressions are symmetric in the two sides (the fused
-    scorer's are); ``uid_a``/``uid_b`` remain canonically ordered either way.
-
-    Returns ``(pairs, dropped_blocks)``: canonical (uid_a < uid_b) pairs with
-    each feature suffixed ``_a``/``_b`` (or ``_l``/``_r`` unoriented), plus
-    the :func:`dropped_blocks` metrics table (no silent caps).
+    Returns ``(pairs, dropped_blocks)``: one row per unordered pair of
+    distinct uids in a block — ``block_key``, canonical ``uid_a < uid_b``,
+    and each feature of the two sides as ``<feature>_l``/``<feature>_r``
+    in the order the join met them (not oriented to ``uid_a``/``uid_b``:
+    every consumer is symmetric in the two sides) — plus the
+    :func:`dropped_blocks` metrics table (no silent caps).
     """
     sizes = addresses.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
     addr = (
@@ -150,27 +159,20 @@ def salted_pair_join(
             "bucket",
             F.pmod(F.xxhash64("uid"), F.col("n_buckets")).cast("int"),
         )
+        .withColumn("_bk", F.xxhash64("block_key"))
+        .withColumn("_uord", F.xxhash64("uid"))
     )
-    if hash_block_key:
-        addr = addr.withColumn("_bk", F.xxhash64("block_key"))
-        join_key = "_bk"
-        left_extra = ["block_key"]  # carried once, left side only
-    else:
-        join_key = "block_key"
-        left_extra = []
-
-    addr = addr.withColumn("_uord", F.xxhash64("uid"))
     feat = ["uid", "_uord"] + list(features)
 
     left = addr.select(
-        join_key,
-        *left_extra,
+        "_bk",
+        "block_key",  # carried once, left side only
         F.col("bucket").alias("lo"),
         F.explode(F.sequence(F.col("bucket"), F.col("n_buckets") - 1)).alias("hi"),
         *[F.col(c).alias(c + "_l") for c in feat],
     )
     right = addr.select(
-        join_key,
+        "_bk",
         F.explode(F.sequence(F.lit(0), F.col("bucket"))).alias("lo"),
         F.col("bucket").alias("hi"),
         *[F.col(c).alias(c + "_r") for c in feat],
@@ -182,7 +184,7 @@ def salted_pair_join(
     # the whole replicated side — a ~GB HashedRelation built serially per
     # executor that neither scales nor survives real data volumes. The hint
     # makes the physical strategy deterministic at every scale.
-    joined = left.hint("merge").join(right.hint("merge"), [join_key, "lo", "hi"])
+    joined = left.hint("merge").join(right.hint("merge"), ["_bk", "lo", "hi"])
     filtered = joined.where(
         # cross-bucket pairs meet exactly once (lower bucket always on the
         # left); same-bucket pairs need a total order to dedup + drop selfs —
@@ -198,28 +200,13 @@ def salted_pair_join(
             & (F.col("uid_l") < F.col("uid_r"))
         )
     )
-    if orient:
-        feature_cols = [
-            F.when(F.col("uid_l") < F.col("uid_r"), F.col(c + "_l"))
-            .otherwise(F.col(c + "_r"))
-            .alias(c + "_a")
-            for c in features
-        ] + [
-            F.when(F.col("uid_l") < F.col("uid_r"), F.col(c + "_r"))
-            .otherwise(F.col(c + "_l"))
-            .alias(c + "_b")
-            for c in features
-        ]
-    else:
-        feature_cols = [F.col(c + "_l") for c in features] + [
-            F.col(c + "_r") for c in features
-        ]
     pairs = filtered.select(
         "block_key",
         # canonical pair order regardless of which side a uid landed on
         F.least("uid_l", "uid_r").alias("uid_a"),
         F.greatest("uid_l", "uid_r").alias("uid_b"),
-        *feature_cols,
+        *[F.col(c + "_l") for c in features],
+        *[F.col(c + "_r") for c in features],
     )
     return pairs, dropped_blocks(addresses, max_block_size)
 
@@ -232,8 +219,10 @@ def candidate_pairs(
 ) -> Tuple[DataFrame, DataFrame]:
     """Generate within-block candidate pairs, skew-salted.
 
-    Returns ``(pairs, dropped_blocks)`` where ``pairs`` carries the full
-    string features of both sides (suffixed ``_a``/``_b``) and
+    Returns ``(pairs, dropped_blocks)`` where ``pairs`` carries canonical
+    ``uid_a < uid_b`` and the full string features of both sides, suffixed
+    ``_l``/``_r`` as :func:`salted_pair_join` met them (a side's features
+    belong together, but ``_l`` is not always ``uid_a``'s), and
     ``dropped_blocks`` is the metrics table of oversized blocks excluded
     from matching. Production scoring runs
     :func:`addressit_spark.scoring.score_pairs_fused`, which generates the

@@ -97,38 +97,14 @@ def make_parse_udf(locale="en-US"):
     per Python worker, shared across batches.
     """
     loc = resolve_locale(locale)
+    fields = ADDRESS_SCHEMA.fieldNames()
+    null_row = dict.fromkeys(fields)
 
     @pandas_udf(ADDRESS_SCHEMA)
     def parse_address(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for texts in it:
-            rows = [
-                parse(t, loc)
-                if t is not None
-                else {
-                    "unit": None,
-                    "number": None,
-                    "street": None,
-                    "state": None,
-                    "country": None,
-                    "postalcode": None,
-                    "regions": None,
-                    "text": None,
-                }
-                for t in texts
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "unit",
-                    "number",
-                    "street",
-                    "state",
-                    "country",
-                    "postalcode",
-                    "regions",
-                    "text",
-                ],
-            )
+            rows = [parse(t, loc) if t is not None else null_row for t in texts]
+            yield pd.DataFrame(rows, columns=fields)
 
     # The kernel IS deterministic; this flag only stops Catalyst from
     # duplicating the (expensive) UDF when a downstream filter references

@@ -21,12 +21,15 @@ tests).
 
 from __future__ import annotations
 
+import sys
 from typing import List, Optional
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from addressit_spark.blocking import dropped_blocks, salted_pair_join
 
 try:  # pragma: no cover - not present in this container
     from rapidfuzz.distance.JaroWinkler import similarity as _rf_jw
@@ -322,17 +325,19 @@ def surface_sim_map(
 ) -> DataFrame:
     """Combined surface-similarity dim: ``(pair_key, sim)``.
 
-    One row per distinct unordered per-block surface pair (street AND
-    locality surfaces in one table — sim depends only on the strings, so
-    the union dedups safely), keyed by ``xxhash64(min_id, max_id)`` of the
-    two ``xxhash64`` surface ids. Diagonal (equal-surface) rows are dropped
-    unless sim ≠ 1.0 (the empty-string surface), so probing consumers can
-    resolve equal surfaces with a guaranteed-miss → ``coalesce(sim, 1.0)``.
+    One row per distinct unordered pair of DISTINCT surfaces that co-occur
+    in a block (street AND locality surfaces in one table — sim depends only
+    on the strings, so the union dedups safely), keyed by
+    ``xxhash64(min_id, max_id)`` of the two ``xxhash64`` surface ids, plus
+    one constant ``('', '') → 0.0`` row: the empty surface is the only one
+    whose sim with itself is not 1.0, so probing consumers resolve every
+    other equal-surface pair with a guaranteed miss → ``coalesce(sim, 1.0)``.
 
-    ``max_block_size``: blocks with more rows are anti-joined out *before*
-    the per-block surface cross. Candidate generation drops those blocks
-    anyway (``salted_pair_join``'s cap), so their sim rows are never
-    consumed — without the cap one dirty mega-block would still pay
+    ``max_block_size``: blocks with more rows (:func:`~addressit_spark.
+    blocking.dropped_blocks`) are anti-joined out *before* the per-block
+    surface cross. Candidate generation drops those blocks anyway
+    (``salted_pair_join``'s cap), so their sim rows are never consumed —
+    without the cap one dirty mega-block would still pay
     O(distinct_surfaces²) inside this "tiny" dim stage. A surface pair that
     also co-occurs in a surviving block is still emitted from that block, so
     surviving pairs lose nothing.
@@ -345,114 +350,77 @@ def surface_sim_map(
     lower scores, never merge clusters. ``None`` (both defaults) keeps the
     exact full map.
 
-    ``surface_salt_threshold``/``salt_cap``: the per-block surface cross is
-    *triangle-salted* exactly like the candidate pair join — a block×tag with
-    ``S`` distinct surfaces spreads its S²/2 similarity pairs over
-    ``~(S/threshold)²/2`` reducer cells (capped) instead of landing them all
-    behind one ``(block, tag)`` join key. Exactness-preserving: the salted
-    pair set provably equals the plain per-block cross (tested), so this
-    guard is always on, unlike the opt-in volume caps above.
+    ``surface_salt_threshold``/``salt_cap``: the per-block surface cross IS
+    :func:`~addressit_spark.blocking.salted_pair_join`, run over the distinct
+    ``(tag + block_key, surface)`` rows with the surface as the uid — its
+    ``block_size`` is the block×tag's distinct-surface count, so its row cap
+    is the ``max_block_surfaces`` cap, and a block×tag with ``S`` distinct
+    surfaces spreads its S²/2 similarity pairs over ``~(S/threshold)²/2``
+    reducer cells (capped) instead of landing them all behind one join key.
+    Exactness-preserving: the salted pair set provably equals the plain
+    per-block cross (tested), so this guard is always on, unlike the opt-in
+    volume caps above.
 
     This is the pipeline's materializable dim stage: at 10^12 pairs it is
     built once (tiny — bounded by co-occurring distinct surfaces), snapshot
     to the checkpoint store, and broadcast into the scoring pass.
     """
     if max_block_size is not None:
-        sizes = addresses.groupBy("block_key").agg(
-            F.count(F.lit(1)).alias("_bsize")
-        )
         addresses = addresses.join(
-            sizes.where(F.col("_bsize") > max_block_size).select("block_key"),
+            dropped_blocks(addresses, max_block_size).select("block_key"),
             "block_key",
             "left_anti",
         )
     addresses = addresses.withColumns(
         {c: F.coalesce(F.col(c), F.lit("")) for c in ("street_norm", "locality")}
     )
-    # One stacked distinct — (block_key, tag, surface) — feeds both dims'
-    # per-block surface tables: the branches share the distinct's shuffle
-    # exchange (Catalyst ReusedExchange), so the only full-table data
-    # movement in the sim build happens once instead of once per dim.
-    stacked = (
+    # One stacked distinct — (tag + block_key, surface) — feeds both dims'
+    # per-block surface crosses: street and locality ride ONE pair join.
+    surfaces = (
         addresses.select(
-            "block_key",
             F.explode(
                 F.array(
                     F.struct(
-                        F.lit("s").alias("t"), F.col("street_norm").alias("v")
+                        F.concat(F.lit("s"), "block_key").alias("block_key"),
+                        F.col("street_norm").alias("uid"),
                     ),
-                    F.struct(F.lit("l").alias("t"), F.col("locality").alias("v")),
+                    F.struct(
+                        F.concat(F.lit("l"), "block_key").alias("block_key"),
+                        F.col("locality").alias("uid"),
+                    ),
                 )
             ).alias("x"),
         )
-        .select("block_key", F.col("x.t").alias("t"), F.col("x.v").alias("v"))
+        .select("x.block_key", "x.uid")
         .distinct()
     )
-    # per-(block, tag) distinct-surface counts drive BOTH the degenerate-
-    # block cap and the salt bucket count, so they're computed once
-    scounts = stacked.groupBy("block_key", "t").agg(
-        F.count(F.lit(1)).alias("_ns")
+    crossed, _ = salted_pair_join(
+        surfaces,
+        (),
+        heavy_threshold=surface_salt_threshold,
+        salt_cap=salt_cap,
+        max_block_size=sys.maxsize if max_block_surfaces is None else max_block_surfaces,
     )
-    if max_block_surfaces is not None:
-        scounts = scounts.where(F.col("_ns") <= max_block_surfaces)
-    # inner join doubles as the cap filter (scounts rows above the cap are
-    # gone, so their block×tag surfaces drop out here)
-    salted = (
-        stacked.join(scounts, ["block_key", "t"])
-        .withColumn(
-            "_nb",
-            F.least(
-                F.ceil(F.col("_ns") / F.lit(surface_salt_threshold)),
-                F.lit(salt_cap),
-            ).cast("int"),
-        )
-        .withColumn("_sb", F.pmod(F.xxhash64("v"), F.col("_nb")).cast("int"))
-        # tag folded into the 8-byte join key: street and locality crosses
-        # ride ONE self-join instead of two unioned ones
-        .withColumn("_bk", F.xxhash64("block_key", "t"))
-    )
-    left = salted.select(
-        "_bk",
-        F.col("_sb").alias("lo"),
-        F.explode(F.sequence(F.col("_sb"), F.col("_nb") - 1)).alias("hi"),
-        F.col("v").alias("_va"),
-    )
-    right = salted.select(
-        "_bk",
-        F.explode(F.sequence(F.lit(0), F.col("_sb"))).alias("lo"),
-        F.col("_sb").alias("hi"),
-        F.col("v").alias("_vb"),
-    )
-    # merge-pinned for the same reason as salted_pair_join: a bad size
-    # estimate must never broadcast the replicated side. Cross-bucket pairs
-    # meet exactly once (bucket orientation — least/greatest canonicalizes);
-    # same-bucket pairs meet twice and keep the string-ordered one, which
-    # also keeps the diagonal (a == b) exactly once.
-    crossed = (
-        left.hint("merge")
-        .join(right.hint("merge"), ["_bk", "lo", "hi"])
-        .where((F.col("lo") != F.col("hi")) | (F.col("_va") <= F.col("_vb")))
-        .select(
-            F.least("_va", "_vb").alias("a"),
-            F.greatest("_va", "_vb").alias("b"),
-        )
-        .distinct()
-    )
+    pairs = crossed.select(
+        F.col("uid_a").alias("a"), F.col("uid_b").alias("b")
+    ).distinct()
+    # a != b, so the longer surface is never empty (surface_sim's m > 0 branch)
     m = F.greatest(F.length("a"), F.length("b"))
-    lev_sim = F.lit(1.0) - F.levenshtein("a", "b") / m
-    sim = (
-        F.when(m > 0, F.greatest(F.col("jw"), lev_sim))
-        .otherwise(F.col("jw"))
-    )
+    sim = F.greatest(F.col("jw"), F.lit(1.0) - F.levenshtein("a", "b") / m)
     ha, hb = F.xxhash64("a"), F.xxhash64("b")
+    # the pair join never emits a == b, so the one equal-surface pair whose
+    # sim is not 1.0 is added as a constant row
+    h0 = F.xxhash64(F.lit(""))
+    empty = addresses.sparkSession.range(1).select(
+        F.xxhash64(h0, h0).alias("pair_key"), F.lit(surface_sim("", "")).alias("sim")
+    )
     return (
-        jw_pairs_table(crossed)
-        .withColumn("sim", sim)
-        .where((F.col("a") != F.col("b")) | (F.col("sim") < 1.0))
+        jw_pairs_table(pairs)
         .select(
             F.xxhash64(F.least(ha, hb), F.greatest(ha, hb)).alias("pair_key"),
-            "sim",
+            sim.alias("sim"),
         )
+        .union(empty)
     )
 
 
@@ -475,11 +443,12 @@ def score_pairs_fused(
     output projections (the join's dedup filter compares hashed orders), so
     a consumer that doesn't project them sheds them from the shuffle
     altogether. The Jaro-Winkler/Levenshtein surface-similarity tables are
-    computed once per DISTINCT surface pair (strings, tiny; diagonal
-    dropped — equal surfaces short-circuit to 1.0 via a left-join miss) and
-    broadcast keyed by a single canonical 8-byte pair hash. Cuts the
-    expanding join's bytes/row by ~3×, which is the difference between
-    memory-bandwidth-bound and CPU-bound on wide executors.
+    computed once per DISTINCT surface pair (strings, tiny; equal surfaces
+    short-circuit to 1.0 via a left-join miss, except the constant
+    ``('', '') → 0.0`` row) and broadcast keyed by a single canonical
+    8-byte pair hash. Cuts the expanding join's bytes/row by ~3×, which is
+    the difference between memory-bandwidth-bound and CPU-bound on wide
+    executors.
 
     Surface-id collisions: a 64-bit collision between two distinct surfaces
     *within one block* would make a pair read the wrong similarity row. With
@@ -501,8 +470,6 @@ def score_pairs_fused(
 
     Returns ``(scored, dropped_blocks)``.
     """
-    from addressit_spark.blocking import salted_pair_join
-
     if sims is None:
         # the same block-size cap candidate generation applies below: sim
         # rows for dropped blocks would never be consumed
@@ -542,8 +509,6 @@ def score_pairs_fused(
         heavy_threshold=heavy_threshold,
         salt_cap=salt_cap,
         max_block_size=max_block_size,
-        hash_block_key=True,
-        orient=False,  # every scoring expression below is symmetric in l/r
     )
     keyed = pairs.withColumns(
         {
@@ -566,13 +531,15 @@ def score_pairs_fused(
     )
 
     # Sim-map miss policy: equal interned ids mean equal surfaces — the dim
-    # intentionally omits that diagonal, so a miss resolves to 1.0 (the
-    # empty-string pair, whose true sim is 0.0, IS in the map and wins the
-    # coalesce). For DISTINCT ids a miss means the pair's surfaces never
-    # co-occurred in a surviving block (block-hash collision merging two
-    # blocks, or a stale precomputed ``sims`` snapshot) — that must default
-    # LOW: defaulting to 1.0 would score unrelated pairs as perfect street +
+    # omits that diagonal, so a miss resolves to 1.0; the empty-string pair,
+    # whose true sim is 0.0, is the map's one constant row and wins the
+    # coalesce in every block, surface-capped or not. For DISTINCT ids a
+    # miss means the pair's surfaces never co-occurred in a surviving,
+    # uncapped block (surface cap, block-hash collision merging two blocks,
+    # or a stale precomputed ``sims`` snapshot) — that must default LOW:
+    # defaulting to 1.0 would score unrelated pairs as perfect street +
     # locality matches and let connected components merge their clusters.
+    # Every scoring expression is symmetric in the l/r sides.
     def sim_or_default(id_l: str, id_r: str, sim: "F.Column") -> "F.Column":
         return F.when(
             F.col(id_l) == F.col(id_r), F.coalesce(sim, F.lit(1.0))

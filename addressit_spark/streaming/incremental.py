@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from addressit_spark.blocking import address_table
 from addressit_spark.parse_stage import DOCUMENTS_SCHEMA, parse_spans
 
 # documents(doc_id, spans) + event-time ingest_ts
@@ -140,26 +141,8 @@ def streaming_session_stats(
 
 
 def _addresses_with_ts(parsed_spans: DataFrame) -> DataFrame:
-    """address_table projection that keeps the event-time column."""
-    a = parsed_spans.where(
-        (F.col("kind") == "text")
-        & F.col("address.street").isNotNull()
-        & (F.col("address.street") != "")
-        & (F.size("address.regions") > 0)
-    )
-    street_norm = F.upper(F.col("address.street"))
-    toks = F.split(street_norm, " ")
-    n = F.size(toks)
-    street_name = (
-        F.when(n > 1, F.concat_ws(" ", F.slice(toks, 1, n - 1)))
-        .otherwise(F.element_at(toks, 1))
-    )
-    locality = F.upper(F.element_at("address.regions", 1))
-    return a.select(
-        F.concat_ws("#", "doc_id", "pos").alias("uid"),
-        "ingest_ts",
-        F.concat_ws("|", street_name, F.soundex(locality)).alias("block_key"),
-    )
+    """The address table's block keys with the event-time column."""
+    return address_table(parsed_spans).select("uid", "ingest_ts", "block_key")
 
 
 _RUNNING_SCHEMA = StructType(
@@ -284,7 +267,6 @@ def incremental_er(
 
     Returns the started ``StreamingQuery``; callers own ``awaitTermination``.
     """
-    from addressit_spark.blocking import address_table
     from addressit_spark.scoring import DEFAULT_TAU, match_edges, score_pairs_fused
 
     eff_tau = DEFAULT_TAU if tau is None else tau

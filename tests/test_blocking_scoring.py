@@ -132,10 +132,10 @@ def test_fused_equals_compositional(spark, addresses):
         (p["uid_a"], p["uid_b"]): (
             p["block_key"],
             score_pair_py(
-                p["street_norm_a"], p["street_norm_b"],
-                p["locality_a"], p["locality_b"],
-                p["number_a"], p["number_b"],
-                p["unit_a"], p["unit_b"],
+                p["street_norm_l"], p["street_norm_r"],
+                p["locality_l"], p["locality_r"],
+                p["number_l"], p["number_r"],
+                p["unit_l"], p["unit_r"],
             ),
         )
         for p in pairs.collect()
@@ -180,8 +180,8 @@ def test_surface_factored_equals_arrow_path(spark, addresses):
     rows = pairs.collect()
 
     def sims(col):
-        sa = [r[col + "_a"] or "" for r in rows]
-        sb = [r[col + "_b"] or "" for r in rows]
+        sa = [r[col + "_l"] or "" for r in rows]
+        sb = [r[col + "_r"] or "" for r in rows]
         jw = jaro_winkler_batch(sa, sb)
         out = []
         for x, y, j in zip(sa, sb, jw.tolist()):
@@ -194,8 +194,8 @@ def test_surface_factored_equals_arrow_path(spark, addresses):
     for r, ss, ls in zip(rows, street.tolist(), loc.tolist()):
         want = W_STREET * ss
         want += W_LOCALITY * ls
-        want += W_NUMBER * (1.0 if (r["number_a"] or "") == (r["number_b"] or "") else 0.0)
-        want += W_UNIT * _unit_sim(r["unit_a"], r["unit_b"])
+        want += W_NUMBER * (1.0 if (r["number_l"] or "") == (r["number_r"] or "") else 0.0)
+        want += W_UNIT * _unit_sim(r["unit_l"], r["unit_r"])
         key = (r["uid_a"], r["uid_b"])
         if fused[key] != (r["block_key"], want):
             bad.append((key, fused[key], want))
@@ -283,9 +283,14 @@ def test_fused_with_precomputed_sims_identical(spark, addresses):
     a = {(r["uid_a"], r["uid_b"]): r["score"] for r in inline.collect()}
     b = {(r["uid_a"], r["uid_b"]): r["score"] for r in pre.collect()}
     assert a == b and len(a) > 0
-    # the map drops the equal-nonempty diagonal entirely
+    # the map drops the equal-nonempty diagonal entirely ...
     diag = sims.where(F.col("sim") >= 1.0).count()
-    assert sims.count() > 0
+    assert diag == 0
+    # ... and holds the empty-surface pair exactly once, as 0.0
+    h0 = F.xxhash64(F.lit(""))
+    empty = sims.where(F.col("pair_key") == F.xxhash64(h0, h0)).collect()
+    assert [r["sim"] for r in empty] == [0.0]
+    assert sims.count() > 1
 
 
 def test_sim_map_miss_defaults_low_for_distinct_surfaces(spark):
@@ -418,6 +423,21 @@ def test_fused_degenerate_surface_block_capped_by_default(spark):
     got_exact = {(r["uid_a"], r["uid_b"]): r["score"] for r in exact.collect()}
     assert got_exact.keys() == got.keys()
     assert all(got_exact[k] > got[k] for k in got)
+
+    # a block whose LOCALITY cross is capped (4 distinct surfaces incl. '')
+    # still scores the equal-empty locality pair as sim('', '') = 0.0: a
+    # miss there would read 1.0 and push (u1, u2) over τ
+    capped_loc = spark.createDataFrame(
+        [("b2", "u1", "MAIN ST", None, "7", None),
+         ("b2", "u2", "MAIN ST", None, "7", None)]
+        + [("b2", "v%d" % i, "MAIN ST", loc, "8", None)
+           for i, loc in enumerate(["ALPHA", "BETA", "GAMMA"])],
+        addrs.schema,
+    )
+    scored, _ = score_pairs_fused(capped_loc, heavy_threshold=2, salt_cap=4)
+    (u12,) = scored.where(F.col("uid_a") == "u1").where(F.col("uid_b") == "u2").collect()
+    want = score_pair_py("MAIN ST", "MAIN ST", None, None, "7", "7", None, None)
+    assert u12["score"] == want < DEFAULT_TAU
 
 
 def test_memo_pairs_with_separator_bytes():
