@@ -48,26 +48,18 @@ class StageStore:
         self.lineage: Dict[str, Dict[str, object]] = {}
 
     def run(
-        self,
-        stage: str,
-        fn: Callable[[], DataFrame],
-        input_fingerprint: str = "",
-        materialize: bool = True,
+        self, stage: str, fn: Callable[[], DataFrame], input_fingerprint: str = ""
     ) -> DataFrame:
         """Compute-or-reload one stage; record lineage metrics either way.
 
-        ``materialize=False`` marks a high-volume pass-through stage (e.g.
-        the 10^12-scale candidate-pair table): it is fused into its consumer
-        instead of being pinned — when a snapshot dir is set it is still
-        written, because snapshots are the resume contract.
+        With no snapshot dir the stage is pinned by an eager
+        ``localCheckpoint``. With one, it is written to ``<dir>/<stage>``
+        and read back, or resumed from there when the snapshot's recorded
+        fingerprint equals ``input_fingerprint``.
         """
         import time
 
         if self.base_dir is None:
-            if not materialize:
-                df = fn()
-                self.lineage[stage] = {"resumed": False, "materialized": False}
-                return df
             # Pin with an eager localCheckpoint so downstream self-joins
             # (pair generation, CC) read materialized blocks instead of
             # re-running the parse/score subtree per branch.
@@ -77,8 +69,7 @@ class StageStore:
                 "resumed": False,
                 "materialized": "localCheckpoint",
                 # eager checkpoint = the stage genuinely executed here, so
-                # this is real per-stage wall time (bench attribution reads
-                # it; fused materialize=False stages bill to their consumer)
+                # this is real per-stage wall time (bench attribution reads it)
                 "wall_sec": round(time.monotonic() - t0, 3),
             }
             return df
@@ -96,11 +87,10 @@ class StageStore:
             # different data or e.g. a different max_block_size — would
             # silently poison every downstream stage (a stale sim map
             # zeroes similarities under the distinct-id miss policy), so
-            # it is recomputed and overwritten instead. Snapshots written
-            # before fingerprints were recorded have no claim to verify
-            # and resume as before.
-            recorded = meta.get("input_fingerprint")
-            if recorded is None or recorded == input_fingerprint:
+            # it is recomputed and overwritten instead, and so is a
+            # snapshot with no recorded fingerprint: it has no claim to
+            # verify.
+            if meta.get("input_fingerprint") == input_fingerprint:
                 df = self.spark.read.parquet(path)
                 meta["resumed"] = True
                 self.lineage[stage] = meta

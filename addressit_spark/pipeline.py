@@ -5,7 +5,7 @@ The north_rule dataflow over the input_hint table shape::
     documents(doc_id, spans[]) ──posexplode──► spans
       ──pandas_udf parse──► address structs          (Arrow batch boundary)
       ──normalize──► blocking keys (street name + soundex(locality))
-      ──triangle-salted slim self-join──► scored pairs ≥ τ
+      ──triangle-salted slim self-join, scored──► match edges (score ≥ τ)
         (interned int surface ids in the shuffle; Jaro-Winkler/Levenshtein
          computed once per distinct surface pair, broadcast back)
       ──connected components──► clusters
@@ -19,6 +19,8 @@ run only above the local-finish cap. CC first pulls at most 2^20 + 1
 edges to the driver in one single-partition task with no exchange; at or
 below the cap that pull is all of CC's Spark work. Parse and scoring are
 shuffle-free map stages; the surface-sim dims are tiny broadcasts.
+Candidate pairs are scored and thresholded in the pass that writes the
+``edges`` stage: they are never a snapshot of their own.
 """
 
 from __future__ import annotations
@@ -26,10 +28,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from addressit_spark.blocking import address_table, dropped_blocks
+from addressit_spark.blocking import address_table, salted_pair_join
 from addressit_spark.cluster import cluster_members, connected_components
 from addressit_spark.checkpoint import StageStore
 from addressit_spark.parse_stage import parse_spans
@@ -41,36 +43,38 @@ from addressit_spark.scoring import (
 )
 
 
+# Snapshot format version per stage, in pipeline order. A stage's
+# fingerprint names its own version and those of the stages before it, so
+# bumping one (when its output changes for the same inputs and parameters)
+# recomputes that stage and every snapshot built from it on resume.
+STAGE_FORMATS = {"addresses": 1, "sim_dims": 1, "edges": 1, "clusters": 1}
+
+
 @dataclass
 class PipelineResult:
     addresses: DataFrame
     pairs: DataFrame
-    scored: DataFrame
     edges: DataFrame
     clusters: DataFrame
     dropped_blocks: DataFrame
     lineage: Dict[str, Dict[str, object]] = field(default_factory=dict)
-    pair_count_obs: Optional[Observation] = None
 
     def candidate_pair_count(self) -> int:
-        """Match-count metric without a second pass over the pair volume.
+        """Candidate pairs, Σ c(c−1)/2 over the block sizes of ``addresses``
+        with the ``dropped_blocks`` left out: one aggregate over the address
+        table, on fresh and resumed runs alike, never a pass over the pairs.
 
-        Preference order: the ``scored`` snapshot's lineage row count (one
-        row per candidate pair), then the ``Observation`` collected on the
-        same execution that materialized the edges stage, then — only if
-        the fused plan never executed in this process (fully resumed run
-        with no scored snapshot metrics) — an explicit ``count()``. At
-        10^12 pairs the first two are free; the fallback is a full pass and
-        only exists for resumed runs whose snapshots predate lineage metrics.
+        uids are unique, so a block of c rows holds c(c−1)/2 pairs. The
+        count differs from ``pairs.count()`` only on an ``xxhash64``
+        block-key collision, whose merged blocks the pair join pairs across
+        (see :func:`~addressit_spark.blocking.salted_pair_join`).
         """
-        rows = self.lineage.get("scored", {}).get("rows")
-        if isinstance(rows, int):
-            return rows
-        if self.pair_count_obs is not None and not self.lineage.get(
-            "edges", {}
-        ).get("resumed", False):
-            return int(self.pair_count_obs.get["n_pairs"])
-        return self.pairs.count()
+        sizes = self.addresses.groupBy("block_key").agg(
+            F.count(F.lit(1)).alias("block_size")
+        )
+        kept = sizes.join(self.dropped_blocks, "block_key", "left_anti")
+        total = kept.agg(F.expr("sum(block_size * (block_size - 1) div 2)")).first()[0]
+        return int(total or 0)
 
 
 def run_pipeline(
@@ -94,23 +98,28 @@ def run_pipeline(
     """
     store = StageStore(spark, checkpoint_dir, resume=resume)
 
-    def _fp(**params: object) -> str:
+    def _fp(stage: str, **params: object) -> str:
         # stage fingerprint = input identity + the parameters that stage's
-        # output depends on, so changing e.g. max_block_size between resumed
-        # runs recomputes the affected snapshots instead of silently reusing
-        # tables built under the old parameters (StageStore verifies this
-        # on resume).
-        return input_fingerprint + "|" + ",".join(
-            "%s=%r" % kv for kv in sorted(params.items())
+        # output depends on + its snapshot format, so changing e.g.
+        # max_block_size between resumed runs, or upgrading to code that
+        # writes the stage differently, recomputes the affected snapshots
+        # instead of silently reusing stale tables (StageStore verifies
+        # this on resume).
+        stages = list(STAGE_FORMATS)
+        formats = stages[: stages.index(stage) + 1]
+        return "%s|%s|%s" % (
+            input_fingerprint,
+            ",".join("%s=%r" % kv for kv in sorted(params.items())),
+            ",".join("%s/v%d" % (s, STAGE_FORMATS[s]) for s in formats),
         )
 
     addresses = store.run(
         "addresses",
         lambda: address_table(parse_spans(documents, locale)),
-        _fp(locale=locale),
+        _fp("addresses", locale=locale),
     )
 
-    score_fp = _fp(
+    score_params = dict(
         locale=locale, heavy_threshold=heavy_threshold, max_block_size=max_block_size
     )
     # the (tiny) surface-similarity dim is its own snapshot stage: built
@@ -125,53 +134,42 @@ def run_pipeline(
             max_block_size=max_block_size,
             max_block_surfaces=heavy_threshold,
         ),
-        score_fp,
+        _fp("sim_dims", **score_params),
     )
 
-    obs_holder: Dict[str, Observation] = {}
-
-    def _scored() -> DataFrame:
-        # blocking + scoring fused: the 10^12-row salted shuffle carries
-        # interned int surface ids, never the feature strings
-        sc, _ = score_pairs_fused(
-            addresses,
-            heavy_threshold=heavy_threshold,
-            max_block_size=max_block_size,
-            sims=sim_dims,
-        )
-        # candidate-pair count rides the first execution of this plan (the
-        # edges materialization) as a CollectMetrics node — the match-count
-        # metric never costs a second pass over the pair volume
-        obs = Observation()
-        obs_holder["pairs"] = obs
-        return sc.observe(obs, F.count(F.lit(1)).alias("n_pairs"))
-
-    # scored is the 10^12-scale volume: fused into the edges pass (never
-    # pinned) unless a snapshot dir makes it a resume point.
-    scored = store.run("scored", _scored, score_fp, materialize=False)
-    edge_fp = _fp(
-        locale=locale,
-        heavy_threshold=heavy_threshold,
-        max_block_size=max_block_size,
-        tau=tau,
+    # blocking + scoring fused into the edges pass: the 10^12-row salted
+    # shuffle carries interned int surface ids, never the feature strings,
+    # and only the pairs that reach τ are written
+    edges = store.run(
+        "edges",
+        lambda: match_edges(
+            score_pairs_fused(
+                addresses,
+                heavy_threshold=heavy_threshold,
+                max_block_size=max_block_size,
+                sims=sim_dims,
+            )[0],
+            tau,
+        ),
+        _fp("edges", tau=tau, **score_params),
     )
-    edges = store.run("edges", lambda: match_edges(scored, tau), edge_fp)
     clusters = store.run(
         "clusters",
         lambda: cluster_members(connected_components(edges), addresses),
-        edge_fp,
+        _fp("clusters", tau=tau, **score_params),
     )
     store.write_lineage()
 
+    # the candidate-pair view (the F1 evaluation universe): the same pair
+    # set the fused scorer scores, built lazily without the scoring
+    pairs, dropped = salted_pair_join(
+        addresses, (), heavy_threshold=heavy_threshold, max_block_size=max_block_size
+    )
     return PipelineResult(
         addresses=addresses,
-        # the candidate-pair view (evaluation universe) is a projection of
-        # scored — same fused plan or snapshot, no second pair generation
-        pairs=scored.select("uid_a", "uid_b", "block_key"),
-        scored=scored,
+        pairs=pairs.select("uid_a", "uid_b", "block_key"),
         edges=edges,
         clusters=clusters,
-        dropped_blocks=dropped_blocks(addresses, max_block_size),
+        dropped_blocks=dropped,
         lineage=store.lineage,
-        pair_count_obs=obs_holder.get("pairs"),
     )

@@ -81,8 +81,8 @@ def main() -> None:
 
     metrics = {
         "addresses": res.addresses.count(),
-        # collected via Observation on the edges materialization — never a
-        # second pass over the (10^12-scale) pair volume
+        # Σ c(c−1)/2 over the kept block sizes — never a pass over the
+        # (10^12-scale) pair volume
         "candidate_pairs": res.candidate_pair_count(),
         "match_edges": res.edges.count(),
         "clusters": res.clusters.select("component").distinct().count(),

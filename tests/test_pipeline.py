@@ -1,5 +1,8 @@
 """End-to-end pipeline: CC vs union-find oracle, F1 ≥ 0.99, resume."""
 
+import json
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -11,7 +14,7 @@ from addressit_spark.cluster import (
     incremental_components,
 )
 from addressit_spark.evaluation import bcubed, labeled_pairs, pairwise_f1
-from addressit_spark.pipeline import run_pipeline
+from addressit_spark.pipeline import STAGE_FORMATS, run_pipeline
 from addressit_spark.sources.corpus import documents_view, synth_corpus, truth_view
 
 
@@ -194,30 +197,41 @@ def test_no_dropped_blocks_at_test_scale(result):
 
 
 def test_candidate_pair_count_via_observation(result):
-    """The match-count metric must equal an explicit count of the pair view
-    without re-running the fused plan: with no snapshot dir it comes from
-    the Observation collected on the edges materialization."""
-    assert result.lineage.get("scored", {}).get("rows") is None
-    assert result.pair_count_obs is not None
+    """The match-count metric, computed from the address table's block
+    sizes, must equal an explicit count of the pair view."""
     assert result.candidate_pair_count() == result.pairs.count()
 
 
 def test_candidate_pair_count_snapshot_and_resume(spark, corpus, tmp_path):
-    """With a snapshot dir the metric reads the scored stage lineage (fresh
-    AND resumed runs) — never a recount of the pair volume."""
+    """With a snapshot dir the metric must equal the pair view's count on
+    fresh AND resumed runs — also when oversized blocks are dropped."""
     ckpt = str(tmp_path / "ckpt")
     docs = documents_view(corpus)
     r1 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
     n = r1.pairs.count()
-    assert r1.lineage["scored"]["rows"] == n
+    assert r1.lineage["edges"]["resumed"] is False
     assert r1.candidate_pair_count() == n
     r2 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
-    assert r2.lineage["scored"]["resumed"] is True
+    assert r2.lineage["edges"]["resumed"] is True
     assert r2.candidate_pair_count() == n
+
+    # a cap below the largest block drops blocks from the pair universe
+    largest = (
+        r1.addresses.groupBy("block_key").count().agg(F.max("count")).first()[0]
+    )
+    capped = str(tmp_path / "capped")
+    r3 = run_pipeline(spark, docs, checkpoint_dir=capped, max_block_size=largest // 2)
+    assert r3.dropped_blocks.count() > 0
+    n3 = r3.pairs.count()
+    assert 0 < n3 < n
+    assert r3.candidate_pair_count() == n3
+    r4 = run_pipeline(spark, docs, checkpoint_dir=capped, max_block_size=largest // 2)
+    assert r4.lineage["edges"]["resumed"] is True
+    assert r4.candidate_pair_count() == n3
 
 
 def test_checkpoint_resume(spark, corpus, tmp_path):
-    stages = {"addresses", "sim_dims", "scored", "edges", "clusters"}
+    stages = {"addresses", "sim_dims", "edges", "clusters"}
     ckpt = tmp_path / "ckpt"
     docs = documents_view(corpus)
     r1 = run_pipeline(spark, docs, checkpoint_dir=str(ckpt))
@@ -236,7 +250,9 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
     assert got1 == got2
 
 
-def test_checkpoint_invalidated_by_parameter_change(spark, corpus, tmp_path):
+def test_checkpoint_invalidated_by_parameter_change(
+    spark, corpus, tmp_path, monkeypatch
+):
     """A resumed run with different stage parameters must NOT reuse
     snapshots built under the old ones (stale sim maps silently zero
     similarities); the fingerprint check recomputes them instead."""
@@ -250,7 +266,30 @@ def test_checkpoint_invalidated_by_parameter_change(spark, corpus, tmp_path):
     # same params → resumes
     r2 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
     assert r2.lineage["sim_dims"]["resumed"] is True
-    # different cap → sim_dims/scored-derived stages recompute, while the
+    # a snapshot whose fingerprint lacks the format tag (as code before
+    # the "|addresses/v1,sim_dims/v1" tag wrote it) or that records no
+    # fingerprint at all recomputes
+    meta_path = os.path.join(ckpt, "sim_dims_metrics.json")
+    with open(meta_path) as fh:
+        meta = json.load(fh)
+    old_fp = "|heavy_threshold=256,locale='en-US',max_block_size=100000"
+    assert meta["input_fingerprint"].startswith(old_fp + "|")
+    untagged = dict(meta, input_fingerprint=old_fp)
+    no_fp = {k: v for k, v in meta.items() if k != "input_fingerprint"}
+    for stale in (untagged, no_fp):
+        with open(meta_path, "w") as fh:
+            json.dump(stale, fh)
+        rerun = run_pipeline(spark, docs, checkpoint_dir=ckpt)
+        assert rerun.lineage["sim_dims"]["resumed"] is False
+        assert {r["uid"]: r["component"] for r in rerun.clusters.collect()} == got1
+    # bumping one stage's format recomputes it and every stage built from it
+    monkeypatch.setitem(STAGE_FORMATS, "sim_dims", STAGE_FORMATS["sim_dims"] + 1)
+    bumped = run_pipeline(spark, docs, checkpoint_dir=ckpt)
+    assert {s: m["resumed"] for s, m in bumped.lineage.items()} == {
+        "addresses": True, "sim_dims": False, "edges": False, "clusters": False
+    }
+    assert {r["uid"]: r["component"] for r in bumped.clusters.collect()} == got1
+    # different cap → sim_dims/edges-derived stages recompute, while the
     # parameter-independent addresses stage still resumes
     r3 = run_pipeline(spark, docs, checkpoint_dir=ckpt, max_block_size=50_000)
     assert r3.lineage["addresses"]["resumed"] is True
