@@ -4,9 +4,11 @@ Every pipeline stage can materialize to a deterministic parquet path
 (``<dir>/<stage>``). On re-entry, a stage whose snapshot exists (parquet
 ``_SUCCESS`` marker) is read back instead of recomputed — the batch analogue
 of the north_rule's "resumes from per-partition snapshot checkpoints".
-Alongside each snapshot a ``_metrics.json`` records row count, partition
-row histogram (per-partition lineage), and the stage's input fingerprint so
-a resumed run can prove it is continuing the same inputs.
+Alongside each snapshot a ``_metrics.json`` records row count and partition
+row histogram (per-partition lineage), read from the parquet footers of the
+part files just written (no Spark job), and the stage's input fingerprint —
+which names the input documents as well as the stage's parameters — so a
+resumed run can prove it is continuing the same inputs.
 """
 
 from __future__ import annotations
@@ -15,26 +17,29 @@ import json
 import os
 from typing import Callable, Dict, Optional
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def _success_marker(path: str) -> str:
     return os.path.join(path, "_SUCCESS")
 
 
-def stage_metrics(df: DataFrame) -> Dict[str, object]:
-    """Row count + per-partition row histogram, computed in one pass."""
-    per_part = (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    )
-    rows = sum(r["rows"] for r in per_part)
+def stage_metrics(path: str) -> Dict[str, object]:
+    """Row count + per-write-partition row histogram of a parquet snapshot,
+    summed from the footers of its part files."""
+    per_part: Dict[str, int] = {}
+    for name in os.listdir(path):
+        if name.startswith("part-") and name.endswith(".parquet"):
+            # part-<write partition>-<job uuid>-c<file>...: a task that
+            # rolls over to a second file keeps its partition number
+            key = str(int(name.split("-")[1]))
+            rows = pq.read_metadata(os.path.join(path, name)).num_rows
+            per_part[key] = per_part.get(key, 0) + rows
     return {
-        "rows": rows,
+        "rows": sum(per_part.values()),
         "partitions": len(per_part),
-        "partition_rows": {str(r["partition"]): r["rows"] for r in per_part},
+        "partition_rows": per_part,
     }
 
 
@@ -100,8 +105,7 @@ class StageStore:
         df = fn()
         df.write.mode("overwrite").parquet(path)
         wall = round(time.monotonic() - t0, 3)
-        out = self.spark.read.parquet(path)
-        meta = stage_metrics(out)
+        meta = stage_metrics(path)
         meta.update(
             {
                 "stage": stage,
@@ -113,7 +117,7 @@ class StageStore:
         with open(meta_path, "w") as fh:
             json.dump(meta, fh, indent=1, sort_keys=True)
         self.lineage[stage] = meta
-        return out
+        return self.spark.read.parquet(path)
 
     def write_lineage(self) -> None:
         if self.base_dir is None:

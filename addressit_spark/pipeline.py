@@ -86,7 +86,6 @@ def run_pipeline(
     max_block_size: int = 100_000,
     checkpoint_dir: Optional[str] = None,
     resume: bool = True,
-    input_fingerprint: str = "",
 ) -> PipelineResult:
     """Run the full ER pipeline; snapshot each stage when checkpoint_dir set.
 
@@ -95,8 +94,22 @@ def run_pipeline(
     degenerate block under the row cap can't blow up the dim stage or the
     broadcast sim table, and its skipped pairs score via the conservative
     miss-low default.
+
+    With ``checkpoint_dir`` set, every stage fingerprint starts with the
+    identity of ``documents``: their row count and the sum of each row's
+    ``xxhash64``. One scan of the input, for file-backed and generated
+    documents alike, so a checkpoint dir reused for other documents
+    recomputes instead of resuming their clusters.
     """
     store = StageStore(spark, checkpoint_dir, resume=resume)
+    source = ""
+    if checkpoint_dir is not None:
+        source = "%d:%s" % tuple(
+            documents.agg(
+                F.count(F.lit(1)),
+                F.sum(F.xxhash64(*documents.columns).cast("decimal(38,0)")),
+            ).first()
+        )
 
     def _fp(stage: str, **params: object) -> str:
         # stage fingerprint = input identity + the parameters that stage's
@@ -108,7 +121,7 @@ def run_pipeline(
         stages = list(STAGE_FORMATS)
         formats = stages[: stages.index(stage) + 1]
         return "%s|%s|%s" % (
-            input_fingerprint,
+            source,
             ",".join("%s=%r" % kv for kv in sorted(params.items())),
             ",".join("%s/v%d" % (s, STAGE_FORMATS[s]) for s in formats),
         )

@@ -27,7 +27,7 @@ from typing import Iterable, Iterator, Optional, Tuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -39,7 +39,9 @@ from pyspark.sql.types import (
 )
 
 from addressit_spark.blocking import address_table
+from addressit_spark.cluster import incremental_components
 from addressit_spark.parse_stage import DOCUMENTS_SCHEMA, parse_spans
+from addressit_spark.scoring import DEFAULT_TAU, match_edges, score_pairs_fused
 
 # documents(doc_id, spans) + event-time ingest_ts
 STREAM_SCHEMA = StructType(
@@ -200,6 +202,18 @@ def running_block_counts(
     )
 
 
+def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
+    # dynamic overwrite of exactly this batch's partition: idempotent under
+    # Structured Streaming's at-least-once foreachBatch replay
+    (
+        df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def incremental_er(
     documents_stream: DataFrame,
     snapshot_addresses: DataFrame,
@@ -207,7 +221,7 @@ def incremental_er(
     edges_dir: str,
     checkpoint_dir: str,
     locale: str = "en-US",
-    tau: Optional[float] = None,
+    tau: float = DEFAULT_TAU,
     heavy_threshold: int = 256,
     max_block_size: int = 100_000,
     clusters_dir: Optional[str] = None,
@@ -223,7 +237,10 @@ def incremental_er(
     self-join of (its new addresses ∪ the accumulated addresses in blocks
     the batch touches) and keeps only edges involving ≥1 new span — so
     every cross-batch pair is scored exactly once, when its later member
-    arrives. Match edges append to ``edges_dir``.
+    arrives. That filter is one predicate (``src`` or ``dst`` IN the new
+    uids), which Spark plans as two existence joins over a single scoring
+    subtree, so the scoring plan runs once per batch. Match edges append to
+    ``edges_dir``.
 
     Exact-parity invariant (asserted in tests): for any split of a corpus
     into snapshot + stream batches,
@@ -272,46 +289,26 @@ def incremental_er(
 
     Returns the started ``StreamingQuery``; callers own ``awaitTermination``.
     """
-    from addressit_spark.scoring import DEFAULT_TAU, match_edges, score_pairs_fused
-
-    eff_tau = DEFAULT_TAU if tau is None else tau
-
     # seed the batch_id=-1 partition by DYNAMIC overwrite, not
     # mode("ignore"): ignore skips on bare directory existence, so a crash
     # mid-seed would leave a partial partition that a restart silently
     # accepts forever. Dynamic overwrite only ever touches the -1 partition
     # (accumulated batches are untouched on restart) and rewriting the
     # deterministic seed is idempotent — a partial seed self-heals.
-    def _seed(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("batch_id", F.lit(-1).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    _seed(snapshot_addresses, state_dir)
+    _write_batch(snapshot_addresses, state_dir, -1)
     if clusters_dir is not None and snapshot_labels is not None:
-        _seed(snapshot_labels.select("uid", "component"), clusters_dir)
-
-    def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
-        # dynamic overwrite of exactly this batch's partition: idempotent
-        # under Structured Streaming's at-least-once foreachBatch replay
-        (
-            df.withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+        _write_batch(snapshot_labels.select("uid", "component"), clusters_dir, -1)
 
     def process(batch_docs: DataFrame, batch_id: int) -> None:
         spark = batch_docs.sparkSession
-        new_addrs = address_table(
-            parse_spans(batch_docs.drop("ingest_ts"), locale)
-        ).localCheckpoint(eager=True)
-        if new_addrs.limit(1).count() == 0:
+        # the emptiness check rides the eager checkpoint's own job
+        seen = Observation()
+        new_addrs = (
+            address_table(parse_spans(batch_docs.drop("ingest_ts"), locale))
+            .observe(seen, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        if seen.get["n"] == 0:
             return
         accumulated = spark.read.parquet(state_dir).where(
             F.col("batch_id") < batch_id
@@ -323,13 +320,6 @@ def incremental_er(
         scored, _ = score_pairs_fused(
             universe, heavy_threshold=heavy_threshold, max_block_size=max_block_size
         )
-        edges = match_edges(scored, eff_tau)
-        new_uids = new_addrs.select(F.col("uid").alias("_nu"))
-        inc = (
-            edges.join(new_uids, edges.src == F.col("_nu"), "left_semi")
-            .unionByName(edges.join(new_uids, edges.dst == F.col("_nu"), "left_semi"))
-            .distinct()
-        )
         # order matters: commit this batch's edges BEFORE growing the state,
         # so a replay after a crash between the writes re-reads the same
         # accumulated set it scored against (the batch_id filter above also
@@ -337,59 +327,45 @@ def incremental_er(
         # inc is pinned first: the edges write, the clustering fold, and
         # its eager internal checkpoints would otherwise each re-execute
         # the whole accumulated-state scoring DAG.
-        inc = inc.localCheckpoint(eager=True)
+        new_uids = new_addrs.select("uid")
+        inc = (
+            match_edges(scored, tau)
+            .where(F.col("src").isin(new_uids) | F.col("dst").isin(new_uids))
+            .localCheckpoint(eager=True)
+        )
         _write_batch(inc, edges_dir, batch_id)
         if clusters_dir is not None:
-            from pyspark.errors import AnalysisException
-
-            from addressit_spark.cluster import incremental_components
-
-            # previous labeling = the max-batch_id partition below this
-            # batch; inputs are all < batch_id so a replayed batch folds the
-            # same prior labels — the labels write stays idempotent. ONLY a
-            # missing/empty directory (cold start without snapshot_labels)
-            # may downgrade to an empty prior; any other failure must
-            # propagate so the stream retries the batch — swallowing a
-            # transient read error here would silently rebuild the labeling
+            # one listing finds the prior labeling (the max batch_id below
+            # this batch, so a replay folds the same prior and the labels
+            # write stays idempotent) and the partitions it supersedes.
+            # ONLY a missing directory (cold start without snapshot_labels)
+            # means an empty prior; a listing error propagates so the stream
+            # retries the batch instead of silently rebuilding the labeling
             # from this batch alone.
-            try:
-                prior = spark.read.parquet(clusters_dir).where(
-                    F.col("batch_id") < batch_id
-                )
-            except AnalysisException:  # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA
-                prior = None
-            last = (
-                prior.agg(F.max("batch_id")).collect()[0][0]
-                if prior is not None
-                else None
-            )
-            if last is None:
-                prev_labels = spark.createDataFrame(
-                    [], "uid string, component string"
-                )
-            else:
-                prev_labels = prior.where(F.col("batch_id") == last).select(
-                    "uid", "component"
-                )
-            _write_batch(
-                incremental_components(prev_labels, inc), clusters_dir, batch_id
-            )
-            # each partition is a FULL labeling — partitions in (last,
-            # batch_id) are superseded the instant this batch's commits, so
-            # prune them: the directory holds the seed, at most the prior
-            # fold, and the current one, instead of one full copy per
-            # micro-batch. Replay safety: a replayed batch N only ever
-            # reads max(batch_id < N), which pruning never removes.
-            if last is not None and last >= 0:
-                jvm = spark._jvm
-                hpath = jvm.org.apache.hadoop.fs.Path(clusters_dir)
-                fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            hpath = spark._jvm.org.apache.hadoop.fs.Path(clusters_dir)
+            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            parts = {}
+            if fs.exists(hpath):
                 for st in fs.listStatus(hpath):
                     name = st.getPath().getName()
                     if name.startswith("batch_id="):
-                        bid = int(name.split("=", 1)[1])
-                        if 0 <= bid < last:
-                            fs.delete(st.getPath(), True)
+                        parts[int(name.split("=", 1)[1])] = st.getPath()
+            last = max((b for b in parts if b < batch_id), default=None)
+            if last is None:
+                prev_labels = spark.createDataFrame([], "uid string, component string")
+            else:
+                prev_labels = spark.read.parquet(parts[last].toString())
+            _write_batch(
+                incremental_components(prev_labels, inc), clusters_dir, batch_id
+            )
+            # each partition is a FULL labeling: once this batch's commits,
+            # the folds below `last` are superseded, so the directory keeps
+            # the seed, the prior fold and this one instead of one copy per
+            # micro-batch. A replayed batch N only ever reads
+            # max(batch_id < N), which pruning never removes.
+            for bid, path in parts.items():
+                if last is not None and 0 <= bid < last:
+                    fs.delete(path, True)
         _write_batch(new_addrs, state_dir, batch_id)
 
     return (
@@ -398,3 +374,4 @@ def incremental_er(
         .trigger(availableNow=True)
         .start()
     )
+

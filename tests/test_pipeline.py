@@ -253,9 +253,10 @@ def test_checkpoint_resume(spark, corpus, tmp_path):
 def test_checkpoint_invalidated_by_parameter_change(
     spark, corpus, tmp_path, monkeypatch
 ):
-    """A resumed run with different stage parameters must NOT reuse
-    snapshots built under the old ones (stale sim maps silently zero
-    similarities); the fingerprint check recomputes them instead."""
+    """A resumed run with different stage parameters or other documents
+    must NOT reuse snapshots built under the old ones (stale sim maps
+    silently zero similarities; stale clusters answer for the wrong input);
+    the fingerprint check recomputes them instead."""
     ckpt = str(tmp_path / "ckpt")
     docs = documents_view(corpus)
     r1 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
@@ -272,7 +273,13 @@ def test_checkpoint_invalidated_by_parameter_change(
     meta_path = os.path.join(ckpt, "sim_dims_metrics.json")
     with open(meta_path) as fh:
         meta = json.load(fh)
-    old_fp = "|heavy_threshold=256,locale='en-US',max_block_size=100000"
+    # the fingerprint names the input documents: count + Σ xxhash64(row)
+    n, h = docs.agg(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*docs.columns).cast("decimal(38,0)")),
+    ).first()
+    params = "heavy_threshold=256,locale='en-US',max_block_size=100000"
+    old_fp = "%d:%s|%s" % (n, h, params)
     assert meta["input_fingerprint"].startswith(old_fp + "|")
     untagged = dict(meta, input_fingerprint=old_fp)
     no_fp = {k: v for k, v in meta.items() if k != "input_fingerprint"}
@@ -298,6 +305,15 @@ def test_checkpoint_invalidated_by_parameter_change(
     # no block is near either cap at test scale → identical clusters
     got3 = dict((r["uid"], r["component"]) for r in r3.clusters.collect())
     assert got1 == got3
+    # other documents into the same dir → every stage recomputes, and the
+    # clusters are those of a fresh run over those documents
+    other = docs.where(F.crc32("doc_id") % 2 == 0)
+    r4 = run_pipeline(spark, other, checkpoint_dir=ckpt, max_block_size=50_000)
+    assert not any(m["resumed"] for m in r4.lineage.values())
+    fresh = run_pipeline(spark, other, max_block_size=50_000)
+    got4 = {r["uid"]: r["component"] for r in r4.clusters.collect()}
+    assert got4 == {r["uid"]: r["component"] for r in fresh.clusters.collect()}
+    assert 0 < len(got4) < len(got1)
 
 
 def test_incremental_components_equals_full_recompute(spark, result):

@@ -277,6 +277,68 @@ def test_incremental_er_foreachbatch_parity(spark, tmp_path):
     assert current_labels() == full_cc
 
 
+def test_incremental_er_empty_batch_and_cold_labels(spark, tmp_path):
+    """A micro-batch whose documents yield no address commits nothing, and
+    live labels cold-start with no labels directory (no snapshot_labels):
+    the final labeling equals a batch CC over the appended edges, and
+    superseded label partitions are pruned."""
+    import os as _os
+
+    from addressit_spark.cluster import connected_components
+    from addressit_spark.streaming import incremental_er
+
+    docs = documents_view(synth_corpus(spark, 60, seed=11))
+    part_snap = docs.where(F.crc32("doc_id") % 4 == 0)
+    part_stream = docs.where(F.crc32("doc_id") % 4 != 0)
+    media = spark.createDataFrame(
+        [("m%d" % i, [("image", "", "media://image/m%d" % i, 0)]) for i in range(3)],
+        docs.schema,
+    )
+
+    # the media-only file is the oldest, so it is the first micro-batch
+    stream_src = tmp_path / "src"
+    media.coalesce(1).write.parquet(str(stream_src))
+    (first,) = stream_src.glob("*.parquet")
+    _os.utime(first, (first.stat().st_mtime - 60,) * 2)
+    part_stream.repartition(3).write.mode("append").parquet(str(stream_src))
+
+    dirs = {k: str(tmp_path / k) for k in ("state", "edges", "labels", "ckpt")}
+    sdf = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(stream_src))
+    )
+    q = incremental_er(
+        sdf, address_table(parse_spans(part_snap)), dirs["state"], dirs["edges"],
+        dirs["ckpt"], clusters_dir=dirs["labels"],
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == 4 and batches[0].numInputRows == 3
+
+    def partitions(path):
+        return sorted(
+            int(d.split("=", 1)[1])
+            for d in _os.listdir(path)
+            if d.startswith("batch_id=")
+        )
+
+    # batch 0 (media only) committed no partition anywhere
+    assert partitions(dirs["state"]) == [-1, 1, 2, 3]
+    assert 0 not in partitions(dirs["edges"])
+    labels = partitions(dirs["labels"])
+    assert 0 not in labels and len(labels) <= 3, labels
+
+    appended = spark.read.parquet(dirs["edges"]).select("src", "dst")
+    assert appended.count() > 0
+    live = spark.read.parquet(dirs["labels"]).where(F.col("batch_id") == labels[-1])
+    assert {(r["uid"], r["component"]) for r in live.collect()} == {
+        (r["uid"], r["component"])
+        for r in connected_components(appended).collect()
+    }
+
+
 def test_incremental_er_cap_divergence_contract(spark, tmp_path):
     """The ONE documented batch/stream divergence: a block crossing
     ``max_block_size`` mid-stream (incremental_er docstring).
