@@ -9,7 +9,8 @@ Pair generation uses a *triangle-salted* self-join so one dense urban block
 key cannot pin a single reducer at 10^12-doc scale:
 
 * every span in a block of size ``c`` gets a bucket ``b ∈ [0, S)`` with
-  ``S = ceil(c / heavy_threshold)`` (S=1 for light blocks — one code path);
+  ``S = min(ceil(c / HEAVY_THRESHOLD), SALT_CAP)`` (S=1 for light blocks —
+  one code path);
 * a row emits LEFT join keys ``(block, b, j)`` for ``j ∈ [b, S)`` and RIGHT
   join keys ``(block, i, b)`` for ``i ∈ [0, b]``;
 * joining LEFT×RIGHT on ``(block, lo, hi)`` meets every unordered pair of
@@ -22,9 +23,15 @@ pairs, the fused scorer and the sim map's per-block surface cross
 provably equals the unsalted self-join pair set (tested at small scale),
 while the shuffle key ``(block, lo, hi)`` spreads a block of c rows over
 ~S(S+1)/2 reducers. Replication cost is S+1 rows per input row, bounded by
-``salt_cap``. Blocks above ``max_block_size`` are *dropped with a logged
-metric* (no silent caps): at 10^12 docs a million-row block means a
+``SALT_CAP``. Blocks above ``MAX_BLOCK_SIZE`` rows are *dropped with a
+logged metric* (no silent caps): at 10^12 docs a million-row block means a
 degenerate key, not signal.
+
+The three scale limits are engine constants, defined here once: every
+entry point runs the same values, and skew handling is a policy for the
+rare hot key, not a per-call knob. ``run_pipeline``, ``incremental_er``
+and the sim map's surface cross read them when called, so a test can
+patch them on this module.
 """
 
 from __future__ import annotations
@@ -34,6 +41,14 @@ from typing import Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+
+# a block with more rows than this is salted over several buckets; the sim
+# map also caps a block's DISTINCT surfaces (per street/locality tag) here
+HEAVY_THRESHOLD = 256
+# at most this many salt buckets per block
+SALT_CAP = 64
+# blocks with more rows than this are dropped from matching (with metrics)
+MAX_BLOCK_SIZE = 100_000
 
 # the columns ``parse_stage.parse_spans`` emits for every span
 _SPAN_COLUMNS = ("doc_id", "pos", "kind", "text", "media_ref", "offset", "address")
@@ -107,9 +122,8 @@ def dropped_blocks(addresses: DataFrame, max_block_size: int) -> DataFrame:
 def salted_pair_join(
     addresses: DataFrame,
     features: Tuple[str, ...],
-    heavy_threshold: int = 256,
-    salt_cap: int = 64,
-    max_block_size: int = 100_000,
+    heavy_threshold: int = HEAVY_THRESHOLD,
+    max_block_size: int = MAX_BLOCK_SIZE,
 ) -> Tuple[DataFrame, DataFrame]:
     """The triangle-salted within-block self-join core.
 
@@ -152,7 +166,7 @@ def salted_pair_join(
             "n_buckets",
             F.least(
                 F.ceil(F.col("block_size") / F.lit(heavy_threshold)),
-                F.lit(salt_cap),
+                F.lit(SALT_CAP),
             ).cast("int"),
         )
         .withColumn(
@@ -213,9 +227,8 @@ def salted_pair_join(
 
 def candidate_pairs(
     addresses: DataFrame,
-    heavy_threshold: int = 256,
-    salt_cap: int = 64,
-    max_block_size: int = 100_000,
+    heavy_threshold: int = HEAVY_THRESHOLD,
+    max_block_size: int = MAX_BLOCK_SIZE,
 ) -> Tuple[DataFrame, DataFrame]:
     """Generate within-block candidate pairs, skew-salted.
 
@@ -233,7 +246,6 @@ def candidate_pairs(
         addresses,
         tuple(PAIR_FEATURES),
         heavy_threshold=heavy_threshold,
-        salt_cap=salt_cap,
         max_block_size=max_block_size,
     )
 

@@ -31,6 +31,7 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from addressit_spark import blocking
 from addressit_spark.blocking import address_table, salted_pair_join
 from addressit_spark.cluster import cluster_members, connected_components
 from addressit_spark.checkpoint import StageStore
@@ -82,18 +83,20 @@ def run_pipeline(
     documents: DataFrame,
     locale: str = "en-US",
     tau: float = DEFAULT_TAU,
-    heavy_threshold: int = 256,
-    max_block_size: int = 100_000,
     checkpoint_dir: Optional[str] = None,
     resume: bool = True,
 ) -> PipelineResult:
     """Run the full ER pipeline; snapshot each stage when checkpoint_dir set.
 
-    ``heavy_threshold`` is both the pair join's salting threshold and the
-    cap on per-block DISTINCT surfaces fed to the sim-dim cross: a
-    degenerate block under the row cap can't blow up the dim stage or the
-    broadcast sim table, and its skipped pairs score via the conservative
-    miss-low default.
+    The scale limits are the engine constants ``blocking.HEAVY_THRESHOLD``
+    and ``blocking.MAX_BLOCK_SIZE``, read when called. Blocks above
+    ``MAX_BLOCK_SIZE`` rows are dropped with metrics. ``HEAVY_THRESHOLD`` is
+    both the pair join's salting threshold and the cap on per-block
+    DISTINCT surfaces fed to the sim-dim cross: a degenerate block under the
+    row cap can't blow up the dim stage or the broadcast sim table, and its
+    skipped pairs score via the conservative miss-low default. Both values
+    are named in the stage fingerprints, so changing one recomputes the
+    snapshots built from it.
 
     With ``checkpoint_dir`` set, every stage fingerprint starts with the
     identity of ``documents``: their row count and the sum of each row's
@@ -114,7 +117,7 @@ def run_pipeline(
     def _fp(stage: str, **params: object) -> str:
         # stage fingerprint = input identity + the parameters that stage's
         # output depends on + its snapshot format, so changing e.g.
-        # max_block_size between resumed runs, or upgrading to code that
+        # MAX_BLOCK_SIZE between resumed runs, or upgrading to code that
         # writes the stage differently, recomputes the affected snapshots
         # instead of silently reusing stale tables (StageStore verifies
         # this on resume).
@@ -132,6 +135,8 @@ def run_pipeline(
         _fp("addresses", locale=locale),
     )
 
+    heavy_threshold = blocking.HEAVY_THRESHOLD
+    max_block_size = blocking.MAX_BLOCK_SIZE
     score_params = dict(
         locale=locale, heavy_threshold=heavy_threshold, max_block_size=max_block_size
     )

@@ -13,10 +13,9 @@ leave the JVM: Jaro-Winkler runs once per DISTINCT surface pair as an
 Arrow-batched ``mapInArrow`` (:func:`surface_sim_map`), and the weighted sum
 is a JVM expression over a broadcast of that small table. The scalar
 functions (:func:`score_pair_py`, :func:`jaro_winkler`, :func:`levenshtein`,
-:func:`surface_sim`) are the oracles tests hold it to. rapidfuzz is used
-when importable; otherwise the fallback implements the standard
-Jaro-Winkler (verified against DuckDB's ``jaro_winkler_similarity`` in
-tests).
+:func:`surface_sim`) are the oracles tests hold it to; :func:`jaro_winkler`
+is the standard Jaro-Winkler (verified against DuckDB's
+``jaro_winkler_similarity`` in tests).
 """
 
 from __future__ import annotations
@@ -29,65 +28,64 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from addressit_spark.blocking import dropped_blocks, salted_pair_join
+from addressit_spark import blocking
+from addressit_spark.blocking import (
+    HEAVY_THRESHOLD,
+    MAX_BLOCK_SIZE,
+    dropped_blocks,
+    salted_pair_join,
+)
 
-try:  # pragma: no cover - not present in this container
-    from rapidfuzz.distance.JaroWinkler import similarity as _rf_jw
 
-    def jaro_winkler(s1: str, s2: str) -> float:
-        return _rf_jw(s1, s2)
-
-except ImportError:
-
-    def jaro_winkler(s1: str, s2: str) -> float:
-        """Jaro-Winkler similarity (prefix scale 0.1, max prefix 4, boost
-        threshold 0.7 — Winkler's original convention, and what DuckDB's
-        ``jaro_winkler_similarity`` implements, which tests use as an oracle).
-        """
-        len1, len2 = len(s1), len(s2)
-        if not len1 or not len2:
-            return 0.0
-        if s1 == s2:
-            return 1.0
-        match_window = max(len1, len2) // 2 - 1
-        if match_window < 0:
-            match_window = 0
-        flags1 = [False] * len1
-        flags2 = [False] * len2
-        matches = 0
-        for i, c1 in enumerate(s1):
-            lo = max(0, i - match_window)
-            hi = min(len2, i + match_window + 1)
-            for j in range(lo, hi):
-                if not flags2[j] and s2[j] == c1:
-                    flags1[i] = True
-                    flags2[j] = True
-                    matches += 1
-                    break
-        if matches == 0:
-            return 0.0
-        transpositions = 0
-        j = 0
-        for i in range(len1):
-            if flags1[i]:
-                while not flags2[j]:
-                    j += 1
-                if s1[i] != s2[j]:
-                    transpositions += 1
-                j += 1
-        transpositions //= 2
-        jaro = (
-            matches / len1 + matches / len2 + (matches - transpositions) / matches
-        ) / 3.0
-        if jaro <= 0.7:  # Winkler boost threshold
-            return jaro
-        prefix = 0
-        for c1, c2 in zip(s1[:4], s2[:4]):
-            if c1 == c2:
-                prefix += 1
-            else:
+def jaro_winkler(s1: str, s2: str) -> float:
+    """Jaro-Winkler similarity (prefix scale 0.1, max prefix 4, boost
+    threshold 0.7 — Winkler's original convention, and what DuckDB's
+    ``jaro_winkler_similarity`` implements, which tests use as an oracle).
+    """
+    len1, len2 = len(s1), len(s2)
+    if not len1 or not len2:
+        return 0.0
+    if s1 == s2:
+        return 1.0
+    match_window = max(len1, len2) // 2 - 1
+    if match_window < 0:
+        match_window = 0
+    flags1 = [False] * len1
+    flags2 = [False] * len2
+    matches = 0
+    for i, c1 in enumerate(s1):
+        lo = max(0, i - match_window)
+        hi = min(len2, i + match_window + 1)
+        for j in range(lo, hi):
+            if not flags2[j] and s2[j] == c1:
+                flags1[i] = True
+                flags2[j] = True
+                matches += 1
                 break
-        return jaro + prefix * 0.1 * (1.0 - jaro)
+    if matches == 0:
+        return 0.0
+    transpositions = 0
+    j = 0
+    for i in range(len1):
+        if flags1[i]:
+            while not flags2[j]:
+                j += 1
+            if s1[i] != s2[j]:
+                transpositions += 1
+            j += 1
+    transpositions //= 2
+    jaro = (
+        matches / len1 + matches / len2 + (matches - transpositions) / matches
+    ) / 3.0
+    if jaro <= 0.7:  # Winkler boost threshold
+        return jaro
+    prefix = 0
+    for c1, c2 in zip(s1[:4], s2[:4]):
+        if c1 == c2:
+            prefix += 1
+        else:
+            break
+    return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
 def levenshtein(s1: str, s2: str) -> int:
@@ -320,8 +318,6 @@ def surface_sim_map(
     addresses: DataFrame,
     max_block_size: Optional[int] = None,
     max_block_surfaces: Optional[int] = None,
-    surface_salt_threshold: int = 256,
-    salt_cap: int = 64,
 ) -> DataFrame:
     """Combined surface-similarity dim: ``(pair_key, sim)``.
 
@@ -333,33 +329,34 @@ def surface_sim_map(
     whose sim with itself is not 1.0, so probing consumers resolve every
     other equal-surface pair with a guaranteed miss → ``coalesce(sim, 1.0)``.
 
-    ``max_block_size``: blocks with more rows (:func:`~addressit_spark.
-    blocking.dropped_blocks`) are anti-joined out *before* the per-block
-    surface cross. Candidate generation drops those blocks anyway
-    (``salted_pair_join``'s cap), so their sim rows are never consumed —
-    without the cap one dirty mega-block would still pay
-    O(distinct_surfaces²) inside this "tiny" dim stage. A surface pair that
-    also co-occurs in a surviving block is still emitted from that block, so
-    surviving pairs lose nothing.
+    ``max_block_size`` (the pipeline passes ``blocking.MAX_BLOCK_SIZE``):
+    blocks with more rows (:func:`~addressit_spark.blocking.dropped_blocks`)
+    are anti-joined out *before* the per-block surface cross. Candidate
+    generation drops those blocks anyway (``salted_pair_join``'s cap), so
+    their sim rows are never consumed — without the cap one dirty
+    mega-block would still pay O(distinct_surfaces²) inside this "tiny" dim
+    stage. A surface pair that also co-occurs in a surviving block is still
+    emitted from that block, so surviving pairs lose nothing.
 
-    ``max_block_surfaces``: additionally skips the cross for any block whose
-    DISTINCT surface count (per street/locality tag) exceeds the cap — the
-    skew guard for a block that is under the row cap but degenerate in
-    surface variety. Pairs whose sim rows are skipped read the scorer's
-    conservative miss default (0.0 for distinct surfaces), so this can only
-    lower scores, never merge clusters. ``None`` (both defaults) keeps the
-    exact full map.
+    ``max_block_surfaces`` (the pipeline passes ``blocking.HEAVY_THRESHOLD``):
+    additionally skips the cross for any block whose DISTINCT surface count
+    (per street/locality tag) exceeds the cap — the skew guard for a block
+    that is under the row cap but degenerate in surface variety. Pairs whose
+    sim rows are skipped read the scorer's conservative miss default (0.0
+    for distinct surfaces), so this can only lower scores, never merge
+    clusters. ``None`` (both defaults) keeps the exact full map.
 
-    ``surface_salt_threshold``/``salt_cap``: the per-block surface cross IS
+    The per-block surface cross IS
     :func:`~addressit_spark.blocking.salted_pair_join`, run over the distinct
     ``(tag + block_key, surface)`` rows with the surface as the uid — its
     ``block_size`` is the block×tag's distinct-surface count, so its row cap
-    is the ``max_block_surfaces`` cap, and a block×tag with ``S`` distinct
-    surfaces spreads its S²/2 similarity pairs over ``~(S/threshold)²/2``
-    reducer cells (capped) instead of landing them all behind one join key.
-    Exactness-preserving: the salted pair set provably equals the plain
-    per-block cross (tested), so this guard is always on, unlike the opt-in
-    volume caps above.
+    is the ``max_block_surfaces`` cap, and it salts at
+    ``blocking.HEAVY_THRESHOLD`` (read when called). The pipeline caps
+    surfaces at that same threshold, so a surviving block×tag always fits
+    one bucket there; only the uncapped map (``max_block_surfaces=None``)
+    ever spreads a block×tag's S²/2 similarity pairs over several reducer
+    cells. Exactness-preserving either way: the salted pair set provably
+    equals the plain per-block cross (tested).
 
     This is the pipeline's materializable dim stage: at 10^12 pairs it is
     built once (tiny — bounded by co-occurring distinct surfaces), snapshot
@@ -397,8 +394,7 @@ def surface_sim_map(
     crossed, _ = salted_pair_join(
         surfaces,
         (),
-        heavy_threshold=surface_salt_threshold,
-        salt_cap=salt_cap,
+        heavy_threshold=blocking.HEAVY_THRESHOLD,
         max_block_size=sys.maxsize if max_block_surfaces is None else max_block_surfaces,
     )
     pairs = crossed.select(
@@ -426,9 +422,8 @@ def surface_sim_map(
 
 def score_pairs_fused(
     addresses: DataFrame,
-    heavy_threshold: int = 256,
-    salt_cap: int = 64,
-    max_block_size: int = 100_000,
+    heavy_threshold: int = HEAVY_THRESHOLD,
+    max_block_size: int = MAX_BLOCK_SIZE,
     sims: Optional[DataFrame] = None,
 ) -> "tuple[DataFrame, DataFrame]":
     """Blocking + scoring fused, with interned surface ids — the one scorer.
@@ -507,7 +502,6 @@ def score_pairs_fused(
         slim,
         ("sid", "lid", "numh", "unith"),
         heavy_threshold=heavy_threshold,
-        salt_cap=salt_cap,
         max_block_size=max_block_size,
     )
     keyed = pairs.withColumns(

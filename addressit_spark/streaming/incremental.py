@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from addressit_spark import blocking
 from addressit_spark.blocking import address_table
 from addressit_spark.cluster import incremental_components
 from addressit_spark.parse_stage import DOCUMENTS_SCHEMA, parse_spans
@@ -222,8 +223,6 @@ def incremental_er(
     checkpoint_dir: str,
     locale: str = "en-US",
     tau: float = DEFAULT_TAU,
-    heavy_threshold: int = 256,
-    max_block_size: int = 100_000,
     clusters_dir: Optional[str] = None,
     snapshot_labels: Optional[DataFrame] = None,
 ):
@@ -247,13 +246,18 @@ def incremental_er(
     ``full_batch_edges == snapshot_self_edges ∪ appended_edges``. Identical
     scores too — the fused scorer's similarity values depend only on the
     surface pair, never on the scoring universe. One documented exception:
-    a block that crosses ``max_block_size`` mid-stream. The batch run drops
-    the whole oversized block (with metrics); the streaming run has already
-    committed edges for the block's under-cap prefix and cannot retract
-    them, so streamed output keeps a *prefix* of that block's edges. Parity
-    is exact whenever no accumulated block exceeds the cap (the tested
-    regime, and the intended one — oversized blocks are dirty-data fallout
-    either way).
+    a block that crosses ``blocking.MAX_BLOCK_SIZE`` mid-stream. The batch
+    run drops the whole oversized block (with metrics); the streaming run
+    has already committed edges for the block's under-cap prefix and cannot
+    retract them, so streamed output keeps a *prefix* of that block's edges.
+    Parity is exact whenever no accumulated block exceeds the cap (the
+    tested regime, and the intended one — oversized blocks are dirty-data
+    fallout either way).
+
+    The scale limits are the engine constants ``blocking.HEAVY_THRESHOLD``
+    and ``blocking.MAX_BLOCK_SIZE``, read once when this is called (as
+    ``run_pipeline`` reads them), so every micro-batch of the query scores
+    under the values the batch run uses.
 
     Restart-safe by construction: every write — the ``batch_id=-1``
     snapshot seed included — lands in its own partition via dynamic
@@ -298,6 +302,9 @@ def incremental_er(
     _write_batch(snapshot_addresses, state_dir, -1)
     if clusters_dir is not None and snapshot_labels is not None:
         _write_batch(snapshot_labels.select("uid", "component"), clusters_dir, -1)
+
+    heavy_threshold = blocking.HEAVY_THRESHOLD
+    max_block_size = blocking.MAX_BLOCK_SIZE
 
     def process(batch_docs: DataFrame, batch_id: int) -> None:
         spark = batch_docs.sparkSession

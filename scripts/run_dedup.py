@@ -69,7 +69,6 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=13)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from addressit_spark.checkpoint import StageStore
@@ -82,11 +81,10 @@ def main() -> None:
     )
     from addressit_spark.operators.sample import assign_split
     from addressit_spark.operators.text import quality_score, with_token_stats
+    from addressit_spark.session import submit_spark
     from addressit_spark.sources.labeled_dups import synth_labeled_dup_corpus
 
-    spark = SparkSession.builder.appName("addressit_spark_dedup").getOrCreate()
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    spark = submit_spark("addressit_spark_dedup")
 
     t0 = time.monotonic()
     if args.synth_groups:

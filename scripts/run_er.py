@@ -40,23 +40,19 @@ def main() -> None:
     ap.add_argument("--checkpoint-dir", default=None, help="per-stage snapshot dir (enables resume)")
     ap.add_argument("--locale", default="en-US", choices=["en-US", "en-AU"])
     ap.add_argument("--tau", type=float, default=None, help="match threshold (default scoring.DEFAULT_TAU)")
-    ap.add_argument("--heavy-threshold", type=int, default=64, help="block size above which salting kicks in")
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--no-resume", action="store_true", help="recompute even if snapshots exist")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from addressit_spark.evaluation import labeled_pairs, pairwise_f1
     from addressit_spark.pipeline import run_pipeline
     from addressit_spark.scoring import DEFAULT_TAU
+    from addressit_spark.session import submit_spark
     from addressit_spark.sources.corpus import documents_view, synth_corpus, truth_view
 
-    # On a cluster, master/executors come from spark-submit; this only fills
-    # in a local default so the script also runs standalone.
-    spark = SparkSession.builder.appName("addressit_spark_er").getOrCreate()
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    # On a cluster, master/executors come from spark-submit (a standalone
+    # run gets the local default); the SQL profile is the engine's own.
+    spark = submit_spark("addressit_spark_er")
 
     t0 = time.monotonic()
     truth = None
@@ -72,7 +68,6 @@ def main() -> None:
         documents,
         locale=args.locale,
         tau=args.tau if args.tau is not None else DEFAULT_TAU,
-        heavy_threshold=args.heavy_threshold,
         checkpoint_dir=args.checkpoint_dir,
         resume=not args.no_resume,
     )

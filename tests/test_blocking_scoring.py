@@ -5,6 +5,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from addressit_spark import blocking
 from addressit_spark.blocking import (
     address_table,
     block_stats,
@@ -27,9 +28,10 @@ def addresses(spark):
     return address_table(parse_spans(docs)).cache()
 
 
-def test_salted_pairs_equal_unsalted(spark, addresses):
+def test_salted_pairs_equal_unsalted(spark, addresses, monkeypatch):
     # tiny threshold forces multi-bucket salting on most blocks
-    salted, dropped = candidate_pairs(addresses, heavy_threshold=2, salt_cap=8)
+    monkeypatch.setattr(blocking, "SALT_CAP", 8)
+    salted, dropped = candidate_pairs(addresses, heavy_threshold=2)
     unsalted = candidate_pairs_unsalted(addresses)
     s = salted.select("uid_a", "uid_b")
     u = unsalted.select("uid_a", "uid_b")
@@ -352,7 +354,7 @@ def test_surface_sim_map_block_caps(spark):
     assert surf_capped < capped
 
 
-def test_surface_sim_map_salted_cross_exact(spark):
+def test_surface_sim_map_salted_cross_exact(spark, monkeypatch):
     """The triangle-salted per-block surface cross == the plain cross.
 
     Round-3 verdict #1: the sim-dim per-block surface cross was a plain
@@ -380,16 +382,13 @@ def test_surface_sim_map_salted_cross_exact(spark):
     # default threshold (256) → every block fits one bucket = the plain cross
     plain = {(r["pair_key"], r["sim"]) for r in surface_sim_map(addrs).collect()}
     # tiny threshold → multi-bucket salted path on both blocks
-    salted = {
-        (r["pair_key"], r["sim"])
-        for r in surface_sim_map(
-            addrs, surface_salt_threshold=2, salt_cap=8
-        ).collect()
-    }
+    monkeypatch.setattr(blocking, "HEAVY_THRESHOLD", 2)
+    monkeypatch.setattr(blocking, "SALT_CAP", 8)
+    salted = {(r["pair_key"], r["sim"]) for r in surface_sim_map(addrs).collect()}
     assert salted == plain and len(plain) > 0
 
 
-def test_fused_degenerate_surface_block_capped_by_default(spark):
+def test_fused_degenerate_surface_block_capped_by_default(spark, monkeypatch):
     """A block under the row cap but with degenerate DISTINCT-surface count
     must not build its surface cross: score_pairs_fused caps its inline sim
     map at heavy_threshold distinct surfaces per block, and the skipped
@@ -408,7 +407,8 @@ def test_fused_degenerate_surface_block_capped_by_default(spark):
         rows, "block_key string, uid string, street_norm string, "
               "locality string, number string, unit string"
     )
-    scored, _ = score_pairs_fused(addrs, heavy_threshold=2, salt_cap=4)
+    monkeypatch.setattr(blocking, "SALT_CAP", 4)
+    scored, _ = score_pairs_fused(addrs, heavy_threshold=2)
     got = {(r["uid_a"], r["uid_b"]): r["score"] for r in scored.collect()}
     assert len(got) == 10  # all pairs still generated — only sims are capped
     # street surfaces distinct + cross skipped → street term 0.0; locality
@@ -417,9 +417,7 @@ def test_fused_degenerate_surface_block_capped_by_default(spark):
     assert all(abs(s - expect) < 1e-12 for s in got.values())
     # the exact (uncapped) map: distinct street pairs now score their true
     # (sub-1.0) surface sims — every score strictly higher
-    exact, _ = score_pairs_fused(
-        addrs, heavy_threshold=2, salt_cap=4, sims=surface_sim_map(addrs)
-    )
+    exact, _ = score_pairs_fused(addrs, heavy_threshold=2, sims=surface_sim_map(addrs))
     got_exact = {(r["uid_a"], r["uid_b"]): r["score"] for r in exact.collect()}
     assert got_exact.keys() == got.keys()
     assert all(got_exact[k] > got[k] for k in got)
@@ -434,7 +432,7 @@ def test_fused_degenerate_surface_block_capped_by_default(spark):
            for i, loc in enumerate(["ALPHA", "BETA", "GAMMA"])],
         addrs.schema,
     )
-    scored, _ = score_pairs_fused(capped_loc, heavy_threshold=2, salt_cap=4)
+    scored, _ = score_pairs_fused(capped_loc, heavy_threshold=2)
     (u12,) = scored.where(F.col("uid_a") == "u1").where(F.col("uid_b") == "u2").collect()
     want = score_pair_py("MAIN ST", "MAIN ST", None, None, "7", "7", None, None)
     assert u12["score"] == want < DEFAULT_TAU

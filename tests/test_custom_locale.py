@@ -11,12 +11,15 @@ identical opts (Node v20 + a 6-line cog/extend stub).
 
 import json
 import os
+import random
 import shutil
 import subprocess
 
 import pytest
 
 from addressit_spark.kernel import make_locale, parse
+
+import parse_golden
 
 NODE = shutil.which("node")
 
@@ -286,19 +289,23 @@ def _gen_input(rng):
     return s or "X"
 
 
-@pytest.mark.skipif(NODE is None, reason="node not installed")
-def test_fuzz_random_overlays_match_executed_reference():
-    """500 random (overlay, input) pairs: custom state maps, falsy disables,
-    country overrides, custom postcodes — kernel output must equal the
-    executed reference given the byte-identical opts."""
-    import random
-
+def _overlay_cases():
+    """500 seeded ``(base, make_locale kwargs, probe request, input)``."""
     rng = random.Random(40413)
     cases = []
     for _ in range(500):
         base, kwargs, req = _gen_overlay(rng)
         text = _gen_input(rng)
         cases.append((base, kwargs, dict(req, base=base, input=text), text))
+    return cases
+
+
+@pytest.mark.skipif(NODE is None, reason="node not installed")
+def test_fuzz_random_overlays_match_executed_reference():
+    """500 random (overlay, input) pairs: custom state maps, falsy disables,
+    country overrides, custom postcodes — kernel output must equal the
+    executed reference given the byte-identical opts."""
+    cases = _overlay_cases()
     want = _run_reference([c[2] for c in cases])
     mismatches = []
     for (base, kwargs, _req, text), w in zip(cases, want):
@@ -306,6 +313,23 @@ def test_fuzz_random_overlays_match_executed_reference():
         got = _norm(parse(text, loc))
         if got != _norm(w):
             mismatches.append((base, kwargs, text, got, _norm(w)))
+    assert not mismatches, (
+        f"{len(mismatches)} divergences; first: {mismatches[0]}"
+    )
+
+
+def test_fuzz_random_overlays_match_golden():
+    """The same 500 (overlay, input) cases against the kernel outputs pinned
+    in ``parse_golden.json.gz`` — the overlay parity gate that runs without
+    node or the reference checkout."""
+    cases = _overlay_cases()
+    golden = parse_golden.load()["overlay"]
+    assert [row[0] for row in golden] == [c[3] for c in cases]
+    mismatches = []
+    for (base, kwargs, _req, text), row in zip(cases, golden):
+        got = parse_golden.fields(parse(text, make_locale(base, **kwargs)))
+        if got != row[1:]:
+            mismatches.append((base, kwargs, text, got, row[1:]))
     assert not mismatches, (
         f"{len(mismatches)} divergences; first: {mismatches[0]}"
     )

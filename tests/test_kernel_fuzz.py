@@ -11,7 +11,10 @@ merge, the only runtime dependency — reference ``package.json:14-16``).
 All eight output fields must match exactly, both locales.
 
 Deterministic (seed 1307) so a divergence is reproducible by case index.
-Skipped when node is unavailable.
+Skipped when node is unavailable. ``test_fuzz_kernel_matches_golden`` runs
+the same inputs against the outputs pinned in ``parse_golden.json.gz``
+(see ``parse_golden.py``), so parity is also gated where the reference
+cannot run.
 """
 
 import json
@@ -23,6 +26,8 @@ import subprocess
 import pytest
 
 from addressit_spark.kernel import parse
+
+import parse_golden
 
 NODE = shutil.which("node")
 
@@ -100,6 +105,11 @@ def _gen(rng: random.Random, locale: str) -> str:
     return s or "X"
 
 
+def _fuzz_inputs(locale: str) -> list:
+    rng = random.Random(1307)
+    return [_gen(rng, locale) for _ in range(1000)]
+
+
 def _run_reference(cases):
     # fresh dir per invocation: concurrent runs (or a stale stub from an
     # older run at a fixed path) can neither race nor mask stub changes
@@ -130,8 +140,7 @@ FIELDS = ("unit", "number", "street", "state", "country", "postalcode", "regions
 @pytest.mark.skipif(NODE is None, reason="node not installed")
 @pytest.mark.parametrize("locale", ["en-US", "en-AU"])
 def test_fuzz_kernel_matches_executed_reference(locale):
-    rng = random.Random(1307)
-    inputs = [_gen(rng, locale) for _ in range(1000)]
+    inputs = _fuzz_inputs(locale)
     want = _run_reference([{"input": t, "locale": locale} for t in inputs])
     mismatches = []
     for i, (t, w) in enumerate(zip(inputs, want)):
@@ -140,4 +149,17 @@ def test_fuzz_kernel_matches_executed_reference(locale):
         w = {k: w[k] if k != "regions" else list(w[k]) for k in FIELDS}
         if g != w:
             mismatches.append((i, t, g, w))
+    assert not mismatches, f"{len(mismatches)} divergences; first: {mismatches[0]}"
+
+
+@pytest.mark.parametrize("locale", ["en-US", "en-AU"])
+def test_fuzz_kernel_matches_golden(locale):
+    inputs = _fuzz_inputs(locale)
+    golden = parse_golden.load()[locale]
+    assert [row[0] for row in golden] == inputs  # the generator is unchanged
+    mismatches = []
+    for i, (t, row) in enumerate(zip(inputs, golden)):
+        got = parse_golden.fields(parse(t, locale=locale))
+        if got != row[1:]:
+            mismatches.append((i, t, got, row[1:]))
     assert not mismatches, f"{len(mismatches)} divergences; first: {mismatches[0]}"

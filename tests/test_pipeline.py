@@ -7,6 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from addressit_spark import blocking
 from addressit_spark.cluster import (
     _distributed_components,
     cluster_members,
@@ -202,7 +203,7 @@ def test_candidate_pair_count_via_observation(result):
     assert result.candidate_pair_count() == result.pairs.count()
 
 
-def test_candidate_pair_count_snapshot_and_resume(spark, corpus, tmp_path):
+def test_candidate_pair_count_snapshot_and_resume(spark, corpus, tmp_path, monkeypatch):
     """With a snapshot dir the metric must equal the pair view's count on
     fresh AND resumed runs — also when oversized blocks are dropped."""
     ckpt = str(tmp_path / "ckpt")
@@ -220,12 +221,13 @@ def test_candidate_pair_count_snapshot_and_resume(spark, corpus, tmp_path):
         r1.addresses.groupBy("block_key").count().agg(F.max("count")).first()[0]
     )
     capped = str(tmp_path / "capped")
-    r3 = run_pipeline(spark, docs, checkpoint_dir=capped, max_block_size=largest // 2)
+    monkeypatch.setattr(blocking, "MAX_BLOCK_SIZE", largest // 2)
+    r3 = run_pipeline(spark, docs, checkpoint_dir=capped)
     assert r3.dropped_blocks.count() > 0
     n3 = r3.pairs.count()
     assert 0 < n3 < n
     assert r3.candidate_pair_count() == n3
-    r4 = run_pipeline(spark, docs, checkpoint_dir=capped, max_block_size=largest // 2)
+    r4 = run_pipeline(spark, docs, checkpoint_dir=capped)
     assert r4.lineage["edges"]["resumed"] is True
     assert r4.candidate_pair_count() == n3
 
@@ -298,7 +300,8 @@ def test_checkpoint_invalidated_by_parameter_change(
     assert {r["uid"]: r["component"] for r in bumped.clusters.collect()} == got1
     # different cap → sim_dims/edges-derived stages recompute, while the
     # parameter-independent addresses stage still resumes
-    r3 = run_pipeline(spark, docs, checkpoint_dir=ckpt, max_block_size=50_000)
+    monkeypatch.setattr(blocking, "MAX_BLOCK_SIZE", 50_000)
+    r3 = run_pipeline(spark, docs, checkpoint_dir=ckpt)
     assert r3.lineage["addresses"]["resumed"] is True
     assert r3.lineage["sim_dims"]["resumed"] is False
     assert r3.lineage["clusters"]["resumed"] is False
@@ -308,9 +311,9 @@ def test_checkpoint_invalidated_by_parameter_change(
     # other documents into the same dir → every stage recomputes, and the
     # clusters are those of a fresh run over those documents
     other = docs.where(F.crc32("doc_id") % 2 == 0)
-    r4 = run_pipeline(spark, other, checkpoint_dir=ckpt, max_block_size=50_000)
+    r4 = run_pipeline(spark, other, checkpoint_dir=ckpt)
     assert not any(m["resumed"] for m in r4.lineage.values())
-    fresh = run_pipeline(spark, other, max_block_size=50_000)
+    fresh = run_pipeline(spark, other)
     got4 = {r["uid"]: r["component"] for r in r4.clusters.collect()}
     assert got4 == {r["uid"]: r["component"] for r in fresh.clusters.collect()}
     assert 0 < len(got4) < len(got1)
@@ -534,3 +537,42 @@ def test_run_dedup_cli_resume_contract(tmp_path):
     assert m3["lineage"]["consensus"]["resumed"]
     assert m3["lineage"]["clusters"]["resumed"]
     assert not m3["lineage"]["decisions"]["resumed"]  # fingerprint changed
+
+
+def test_run_er_cli_resume_contract(tmp_path):
+    """scripts/run_er.py (the spark-submit entry): a fresh run writes
+    exactly the four stage snapshots, and a second run resumes every stage
+    with the same counts and pairwise F1 ≥ 0.99."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "out")
+    ckpt = tmp_path / "ckpt"
+    stages = {"addresses", "sim_dims", "edges", "clusters"}
+
+    def run():
+        cmd = [
+            sys.executable, "scripts/run_er.py",
+            "--synth-entities", "200", "--output", out,
+            "--checkpoint-dir", str(ckpt),
+        ]
+        r = subprocess.run(cmd, capture_output=True, text=True, timeout=420, cwd=repo)
+        assert r.returncode == 0, r.stderr[-2000:]
+        with open(out + "/metrics.json") as fh:
+            return json.load(fh)
+
+    m1 = run()
+    assert {p.name for p in ckpt.iterdir() if p.is_dir()} == stages
+    assert set(m1["lineage"]) == stages
+    assert not any(v["resumed"] for v in m1["lineage"].values())
+    assert m1["match_edges"] > 0
+
+    m2 = run()
+    assert {p.name for p in ckpt.iterdir() if p.is_dir()} == stages
+    assert set(m2["lineage"]) == stages
+    assert all(v["resumed"] for v in m2["lineage"].values())
+    for k in ("match_edges", "clusters"):
+        assert m2[k] == m1[k], k
+    for m in (m1, m2):
+        assert m["pairwise"]["f1"] >= 0.99, m["pairwise"]

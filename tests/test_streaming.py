@@ -4,6 +4,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from addressit_spark import blocking
 from addressit_spark.blocking import address_table
 from addressit_spark.parse_stage import parse_spans
 from addressit_spark.sources.corpus import documents_view, synth_corpus
@@ -339,9 +340,9 @@ def test_incremental_er_empty_batch_and_cold_labels(spark, tmp_path):
     }
 
 
-def test_incremental_er_cap_divergence_contract(spark, tmp_path):
+def test_incremental_er_cap_divergence_contract(spark, tmp_path, monkeypatch):
     """The ONE documented batch/stream divergence: a block crossing
-    ``max_block_size`` mid-stream (incremental_er docstring).
+    ``blocking.MAX_BLOCK_SIZE`` mid-stream (incremental_er docstring).
 
     Batch semantics drop the whole oversized block (with metrics); the
     stream has already committed edges for the block's under-cap prefix and
@@ -363,6 +364,7 @@ def test_incremental_er_cap_divergence_contract(spark, tmp_path):
         )
 
     CAP = 6
+    monkeypatch.setattr(blocking, "MAX_BLOCK_SIZE", CAP)
     snap_addrs = address_table(parse_spans(docs(["s1", "s2", "s3"])))
     assert snap_addrs.count() == 3
 
@@ -381,10 +383,7 @@ def test_incremental_er_cap_divergence_contract(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_src))
     )
-    q = incremental_er(
-        sdf, snap_addrs, state_dir, edges_dir, str(tmp_path / "ckpt"),
-        max_block_size=CAP,
-    )
+    q = incremental_er(sdf, snap_addrs, state_dir, edges_dir, str(tmp_path / "ckpt"))
     q.awaitTermination(300)
 
     def edge_set(df):
