@@ -18,8 +18,10 @@ key cannot pin a single reducer at 10^12-doc scale:
   construction, same-bucket pairs deduped by the ``uid_l < uid_r`` rule.
 
 :func:`salted_pair_join` is the one such join on the ER path: candidate
-pairs, the fused scorer and the sim map's per-block surface cross
-(``scoring.surface_sim_map``) all run through it. The salted pair set
+pairs, the fused scorer and the pipeline's F1 universe all run through it.
+The sim map (``scoring.surface_sim_map``) needs no join: it crosses each
+block's distinct surfaces inside one aggregation, whose map-side partial
+aggregate collapses a hot block before the shuffle. The salted pair set
 provably equals the unsalted self-join pair set (tested at small scale),
 while the shuffle key ``(block, lo, hi)`` spreads a block of c rows over
 ~S(S+1)/2 reducers. Replication cost is S+1 rows per input row, bounded by
@@ -30,7 +32,7 @@ degenerate key, not signal.
 The three scale limits are engine constants, defined here once: every
 entry point runs the same values, and skew handling is a policy for the
 rare hot key, not a per-call knob. ``run_pipeline``, ``incremental_er``
-and the sim map's surface cross read them when called, so a test can
+and ``salted_pair_join``'s bucket cap read them when called, so a test can
 patch them on this module.
 """
 
@@ -43,7 +45,7 @@ from pyspark.sql import functions as F
 
 
 # a block with more rows than this is salted over several buckets; the sim
-# map also caps a block's DISTINCT surfaces (per street/locality tag) here
+# map also caps a block's DISTINCT surfaces (per street/locality set) here
 HEAVY_THRESHOLD = 256
 # at most this many salt buckets per block
 SALT_CAP = 64
@@ -109,16 +111,6 @@ def block_stats(addresses: DataFrame) -> DataFrame:
     )
 
 
-def dropped_blocks(addresses: DataFrame, max_block_size: int) -> DataFrame:
-    """Blocks above ``max_block_size`` rows, excluded from matching:
-    ``(block_key, block_size)`` — the metric behind "no silent caps"."""
-    return (
-        addresses.groupBy("block_key")
-        .agg(F.count(F.lit(1)).alias("block_size"))
-        .where(F.col("block_size") > max_block_size)
-    )
-
-
 def salted_pair_join(
     addresses: DataFrame,
     features: Tuple[str, ...],
@@ -132,7 +124,7 @@ def salted_pair_join(
     paid once per replicated row, so callers should project the MINIMUM set
     their consumer reads (the fused scorer carries interned int surface ids;
     :func:`candidate_pairs` carries the full string feature set, the inputs
-    of the scalar scoring oracle; the sim map's surface cross carries none).
+    of the scalar scoring oracle; the pipeline's F1 universe carries none).
 
     The join key is ``xxhash64(block_key)`` (8 bytes); the block-key string
     is carried once, on the left side only, for the output. A 64-bit
@@ -157,7 +149,8 @@ def salted_pair_join(
     and each feature of the two sides as ``<feature>_l``/``<feature>_r``
     in the order the join met them (not oriented to ``uid_a``/``uid_b``:
     every consumer is symmetric in the two sides) — plus the
-    :func:`dropped_blocks` metrics table (no silent caps).
+    ``(block_key, block_size)`` table of the blocks above ``max_block_size``
+    rows, excluded from matching (no silent caps).
     """
     sizes = addresses.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
     addr = (
@@ -222,7 +215,7 @@ def salted_pair_join(
         *[F.col(c + "_l") for c in features],
         *[F.col(c + "_r") for c in features],
     )
-    return pairs, dropped_blocks(addresses, max_block_size)
+    return pairs, sizes.where(F.col("block_size") > max_block_size)
 
 
 def candidate_pairs(

@@ -18,7 +18,11 @@ Shuffle inventory (what the plan pays at 10^12 docs): 1 for block sizes,
 run only above the local-finish cap. CC first pulls at most 2^20 + 1
 edges to the driver in one single-partition task with no exchange; at or
 below the cap that pull is all of CC's Spark work. Parse and scoring are
-shuffle-free map stages; the surface-sim dims are tiny broadcasts.
+shuffle-free map stages. The surface-sim dim is built by one aggregation
+per block (its shuffle carries each block's distinct surfaces, collapsed
+map-side), a distinct over the crossed surface pairs and a spread of those
+pairs over the cores for the Jaro-Winkler kernel; it has no join, and
+scoring reads it as a tiny broadcast.
 Candidate pairs are scored and thresholded in the pass that writes the
 ``edges`` stage: they are never a snapshot of their own.
 """

@@ -20,7 +20,6 @@ is the standard Jaro-Winkler (verified against DuckDB's
 
 from __future__ import annotations
 
-import sys
 from typing import List, Optional
 
 import numpy as np
@@ -28,13 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from addressit_spark import blocking
-from addressit_spark.blocking import (
-    HEAVY_THRESHOLD,
-    MAX_BLOCK_SIZE,
-    dropped_blocks,
-    salted_pair_join,
-)
+from addressit_spark.blocking import HEAVY_THRESHOLD, MAX_BLOCK_SIZE, salted_pair_join
 
 
 def jaro_winkler(s1: str, s2: str) -> float:
@@ -256,43 +249,9 @@ def score_pair_py(
     return s
 
 
-def _jw_dict_memo(col_a, col_b) -> np.ndarray:
-    """Jaro-Winkler over two pyarrow string arrays via dictionary memoization.
-
-    Each column is dictionary-encoded *inside Arrow* separately and the code
-    TUPLES are paired arithmetically (``a * n_b + b``) — only the UNIQUE
-    strings are ever materialized as Python objects, and no separator byte
-    exists for a surface to alias through (a ``\\x01``-joined key could
-    mis-split a surface containing \\x01). Within a block all pairs share a
-    handful of street/locality surfaces, so uniques ≪ rows.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def enc(col):
-        e = pc.dictionary_encode(pc.fill_null(col, ""))
-        if isinstance(e, pa.ChunkedArray):
-            e = e.combine_chunks()
-        return (
-            e.dictionary.to_pylist(),
-            e.indices.to_numpy(zero_copy_only=False).astype(np.int64),
-        )
-
-    da, ia = enc(col_a)
-    db, ib = enc(col_b)
-    n_b = max(len(db), 1)
-    uniq, gather = np.unique(ia * n_b + ib, return_inverse=True)
-    ua = [da[i] for i in uniq // n_b]
-    ub = [db[i] for i in uniq % n_b]
-    return jaro_winkler_batch(ua, ub)[gather]
-
-
 def jw_pairs_table(pairs_of_strings: DataFrame) -> DataFrame:
-    """(a, b) string pairs → (a, b, jw) via the vectorized kernel.
-
-    Runs as ``mapInArrow`` over what should be a *small* distinct-pair set;
-    the dictionary memo inside makes repeated surfaces free.
-    """
+    """Distinct non-null ``(a, b)`` string pairs → ``(a, b, jw)`` via the
+    vectorized kernel, run as ``mapInArrow`` over a *small* pair set."""
 
     def kernel(batches):
         import pyarrow as pa
@@ -300,10 +259,10 @@ def jw_pairs_table(pairs_of_strings: DataFrame) -> DataFrame:
         for batch in batches:
             if not batch.num_rows:
                 continue
-            jw = _jw_dict_memo(batch.column("a"), batch.column("b"))
+            a, b = batch.column("a"), batch.column("b")
+            jw = jaro_winkler_batch(a.to_pylist(), b.to_pylist())
             yield pa.RecordBatch.from_arrays(
-                [batch.column("a"), batch.column("b"), pa.array(jw, type=pa.float64())],
-                names=["a", "b", "jw"],
+                [a, b, pa.array(jw, type=pa.float64())], names=["a", "b", "jw"]
             )
 
     # AQE coalesces the (small) distinct-pair shuffle to one partition,
@@ -316,8 +275,8 @@ def jw_pairs_table(pairs_of_strings: DataFrame) -> DataFrame:
 
 def surface_sim_map(
     addresses: DataFrame,
-    max_block_size: Optional[int] = None,
-    max_block_surfaces: Optional[int] = None,
+    max_block_size: int = MAX_BLOCK_SIZE,
+    max_block_surfaces: int = HEAVY_THRESHOLD,
 ) -> DataFrame:
     """Combined surface-similarity dim: ``(pair_key, sim)``.
 
@@ -329,83 +288,71 @@ def surface_sim_map(
     whose sim with itself is not 1.0, so probing consumers resolve every
     other equal-surface pair with a guaranteed miss → ``coalesce(sim, 1.0)``.
 
+    One ``groupBy("block_key")`` builds each block's row count and its two
+    sorted distinct surface sets (street, locality; NULL reads ``''``).
+    Partial aggregation collapses a hot block to its distinct surfaces
+    before the shuffle, so no salting is needed here. Each set is then
+    crossed in place — pairs ``i < j`` of the sorted array, so ``a < b`` —
+    and the pairs are deduped across blocks and tags.
+
     ``max_block_size`` (the pipeline passes ``blocking.MAX_BLOCK_SIZE``):
-    blocks with more rows (:func:`~addressit_spark.blocking.dropped_blocks`)
-    are anti-joined out *before* the per-block surface cross. Candidate
-    generation drops those blocks anyway (``salted_pair_join``'s cap), so
-    their sim rows are never consumed — without the cap one dirty
-    mega-block would still pay O(distinct_surfaces²) inside this "tiny" dim
-    stage. A surface pair that also co-occurs in a surviving block is still
-    emitted from that block, so surviving pairs lose nothing.
+    blocks with more rows are left out. Candidate generation drops them
+    too, so their sim rows would never be consumed. A surface pair that also
+    co-occurs in a surviving block is still emitted from that block.
 
     ``max_block_surfaces`` (the pipeline passes ``blocking.HEAVY_THRESHOLD``):
-    additionally skips the cross for any block whose DISTINCT surface count
-    (per street/locality tag) exceeds the cap — the skew guard for a block
-    that is under the row cap but degenerate in surface variety. Pairs whose
-    sim rows are skipped read the scorer's conservative miss default (0.0
-    for distinct surfaces), so this can only lower scores, never merge
-    clusters. ``None`` (both defaults) keeps the exact full map.
+    a street or locality set with more distinct surfaces is not crossed —
+    the guard for a block under the row cap but degenerate in surface
+    variety. Pairs whose sim rows are skipped read the scorer's
+    conservative miss default (0.0 for distinct surfaces), so this can only
+    lower scores, never merge clusters.
 
-    The per-block surface cross IS
-    :func:`~addressit_spark.blocking.salted_pair_join`, run over the distinct
-    ``(tag + block_key, surface)`` rows with the surface as the uid — its
-    ``block_size`` is the block×tag's distinct-surface count, so its row cap
-    is the ``max_block_surfaces`` cap, and it salts at
-    ``blocking.HEAVY_THRESHOLD`` (read when called). The pipeline caps
-    surfaces at that same threshold, so a surviving block×tag always fits
-    one bucket there; only the uncapped map (``max_block_surfaces=None``)
-    ever spreads a block×tag's S²/2 similarity pairs over several reducer
-    cells. Exactness-preserving either way: the salted pair set provably
-    equals the plain per-block cross (tested).
+    Memory bound: a block's two sets hold its distinct street and locality
+    spellings, and the block key already fixes the street name and the
+    locality's soundex, so a set is small unless the block is degenerate.
+    Both caps filter only after the aggregation: a block above the row cap
+    or a set above the surface cap is built once and never crossed, and a
+    crossed set yields at most ``c(c−1)/2`` pairs (32,640 at the default
+    cap of 256).
 
-    This is the pipeline's materializable dim stage: at 10^12 pairs it is
-    built once (tiny — bounded by co-occurring distinct surfaces), snapshot
-    to the checkpoint store, and broadcast into the scoring pass.
+    This is the pipeline's materializable dim stage: built once (tiny —
+    bounded by co-occurring distinct surfaces), snapshot to the checkpoint
+    store, and broadcast into the scoring pass.
     """
-    if max_block_size is not None:
-        addresses = addresses.join(
-            dropped_blocks(addresses, max_block_size).select("block_key"),
-            "block_key",
-            "left_anti",
+
+    def surface_set(c: str) -> "F.Column":
+        return F.array_sort(F.collect_set(F.coalesce(F.col(c), F.lit(""))))
+
+    def crossed(c: str) -> "F.Column":
+        # every pair i < j of the sorted set; a set over the cap yields none
+        xs = F.col(c)
+        n = F.when(F.size(xs) <= max_block_surfaces, F.size(xs)).otherwise(0)
+        return F.flatten(
+            F.transform(
+                F.slice(xs, 1, n),
+                lambda x, i: F.transform(
+                    F.slice(xs, i + 2, n), lambda y: F.struct(x.alias("a"), y.alias("b"))
+                ),
+            )
         )
-    addresses = addresses.withColumns(
-        {c: F.coalesce(F.col(c), F.lit("")) for c in ("street_norm", "locality")}
-    )
-    # One stacked distinct — (tag + block_key, surface) — feeds both dims'
-    # per-block surface crosses: street and locality ride ONE pair join.
-    surfaces = (
-        addresses.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.concat(F.lit("s"), "block_key").alias("block_key"),
-                        F.col("street_norm").alias("uid"),
-                    ),
-                    F.struct(
-                        F.concat(F.lit("l"), "block_key").alias("block_key"),
-                        F.col("locality").alias("uid"),
-                    ),
-                )
-            ).alias("x"),
+
+    pairs = (
+        addresses.groupBy("block_key")
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            surface_set("street_norm").alias("s"),
+            surface_set("locality").alias("l"),
         )
-        .select("x.block_key", "x.uid")
+        .where(F.col("rows") <= max_block_size)
+        .select(F.inline(F.concat(crossed("s"), crossed("l"))))
         .distinct()
     )
-    crossed, _ = salted_pair_join(
-        surfaces,
-        (),
-        heavy_threshold=blocking.HEAVY_THRESHOLD,
-        max_block_size=sys.maxsize if max_block_surfaces is None else max_block_surfaces,
-    )
-    pairs = crossed.select(
-        F.col("uid_a").alias("a"), F.col("uid_b").alias("b")
-    ).distinct()
     # a != b, so the longer surface is never empty (surface_sim's m > 0 branch)
     m = F.greatest(F.length("a"), F.length("b"))
     sim = F.greatest(F.col("jw"), F.lit(1.0) - F.levenshtein("a", "b") / m)
     ha, hb = F.xxhash64("a"), F.xxhash64("b")
-    # the pair join never emits a == b, so the one equal-surface pair whose
-    # sim is not 1.0 is added as a constant row
+    # the cross never emits a == b, so the one equal-surface pair whose sim
+    # is not 1.0 is added as a constant row
     h0 = F.xxhash64(F.lit(""))
     empty = addresses.sparkSession.range(1).select(
         F.xxhash64(h0, h0).alias("pair_key"), F.lit(surface_sim("", "")).alias("sim")
@@ -460,8 +407,7 @@ def score_pairs_fused(
     pairs in the "tiny" dim stage, and a broadcast sim table that is no
     longer tiny) skips its surface cross, and its distinct-surface pairs read
     the conservative miss default (0.0) — scores can only go DOWN, never
-    merge clusters. Pass ``sims=surface_sim_map(addresses)`` for the exact
-    uncapped map.
+    merge clusters.
 
     Returns ``(scored, dropped_blocks)``.
     """

@@ -1,5 +1,7 @@
 """Blocking + scoring: salted pair-set equivalence, JW oracle, thresholds."""
 
+import itertools
+
 import duckdb
 import pytest
 
@@ -354,38 +356,96 @@ def test_surface_sim_map_block_caps(spark):
     assert surf_capped < capped
 
 
-def test_surface_sim_map_salted_cross_exact(spark, monkeypatch):
-    """The triangle-salted per-block surface cross == the plain cross.
+_ADDR_SCHEMA = (
+    "block_key string, uid string, street_norm string, "
+    "locality string, number string, unit string"
+)
 
-    Round-3 verdict #1: the sim-dim per-block surface cross was a plain
-    single-key join — one block with many distinct surfaces pinned one
-    reducer. The cross is now triangle-salted (like salted_pair_join);
-    exactness must hold at any bucket count.
-    """
-    from addressit_spark.scoring import surface_sim_map
 
+def _oracle_pairs(rows, max_block_size, max_block_surfaces):
+    """The surface pairs ``surface_sim_map`` must cross, by brute force:
+    ``itertools.combinations`` over each kept block×tag's sorted distinct
+    surfaces (NULL reads '')."""
+    blocks = {}
+    for r in rows:
+        blocks.setdefault(r[0], []).append(r)
+    pairs = set()
+    for block in blocks.values():
+        if len(block) > max_block_size:
+            continue
+        for col in (2, 3):  # street_norm, locality
+            surfaces = sorted({r[col] or "" for r in block})
+            if len(surfaces) <= max_block_surfaces:
+                pairs.update(itertools.combinations(surfaces, 2))
+    return pairs
+
+
+def _assert_sim_map_matches_oracle(spark, rows, max_block_size, max_block_surfaces):
+    """``surface_sim_map`` == the oracle pairs scored by ``surface_sim`` and
+    keyed by the same ``xxhash64`` expression, plus the constant empty row;
+    compared as sorted row lists, so a duplicate row fails too."""
+    from addressit_spark.scoring import surface_sim, surface_sim_map
+
+    pairs = _oracle_pairs(rows, max_block_size, max_block_surfaces) | {("", "")}
+    ha, hb = F.xxhash64("a"), F.xxhash64("b")
+    want = spark.createDataFrame(
+        [(a, b, surface_sim(a, b)) for a, b in pairs], "a string, b string, sim double"
+    ).select(F.xxhash64(F.least(ha, hb), F.greatest(ha, hb)).alias("pair_key"), "sim")
+    got = surface_sim_map(
+        spark.createDataFrame(rows, _ADDR_SCHEMA),
+        max_block_size=max_block_size,
+        max_block_surfaces=max_block_surfaces,
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_surface_sim_map_dense_blocks_match_oracle(spark):
+    """A dense block (13 distinct street surfaces, 7 localities) and a
+    second block sharing some of its surfaces: the in-place per-block cross
+    at the default caps equals the combinations oracle, and a pair that
+    co-occurs in both blocks is emitted once."""
     rows = [
-        # one dense block: 13 distinct street surfaces, 7 localities
         ("dense", "u%d" % i, "STREET %d" % (i % 13), "TOWN %d" % (i % 7),
          str(i % 3), None)
         for i in range(40)
     ] + [
-        # a second block sharing some surfaces (tests cross-block dedup)
         ("other", "v%d" % i, "STREET %d" % (i % 5), "TOWN %d" % (i % 2),
          "9", "U%d" % i)
         for i in range(10)
     ]
-    addrs = spark.createDataFrame(
-        rows, "block_key string, uid string, street_norm string, "
-              "locality string, number string, unit string"
+    _assert_sim_map_matches_oracle(
+        spark, rows, blocking.MAX_BLOCK_SIZE, blocking.HEAVY_THRESHOLD
     )
-    # default threshold (256) → every block fits one bucket = the plain cross
-    plain = {(r["pair_key"], r["sim"]) for r in surface_sim_map(addrs).collect()}
-    # tiny threshold → multi-bucket salted path on both blocks
-    monkeypatch.setattr(blocking, "HEAVY_THRESHOLD", 2)
-    monkeypatch.setattr(blocking, "SALT_CAP", 8)
-    salted = {(r["pair_key"], r["sim"]) for r in surface_sim_map(addrs).collect()}
-    assert salted == plain and len(plain) > 0
+
+
+def test_surface_sim_map_cap_boundaries_match_oracle(spark):
+    """Both caps are inclusive: a block of exactly ``max_block_size`` rows is
+    kept and one more row drops it; a set of exactly ``max_block_surfaces``
+    distinct surfaces is crossed and one more skips it (the block's other
+    set is still crossed). Every boundary block has surfaces of its own, so
+    a ``<=`` turned ``<`` (or the reverse) changes the map."""
+    size, surfaces = 6, 4
+    rows = (
+        # 5 rows, exactly 4 street surfaces: crossed
+        [("surf_at", "a%d" % i, "ELM ST %d" % (i % 4), "OGDEN" if i % 2 else "OGDENN",
+          "1", None) for i in range(5)]
+        # 5 rows, 5 street surfaces: street set skipped, localities crossed
+        + [("surf_over", "b%d" % i, "OAK AVE %d" % i, "TROY" if i % 2 else "TROYE",
+            "2", None) for i in range(5)]
+        # exactly 6 rows (one NULL street reads ''): kept
+        + [("rows_at", "c%d" % i, "PINE RD %d" % (i % 2) if i else None,
+            "ALBANY" if i % 2 else "ALBANI", "3", None) for i in range(6)]
+        # 7 rows: dropped
+        + [("rows_over", "d%d" % i, "BIRCH LN %d" % (i % 2),
+            "SALEM" if i % 2 else "SALEMM", "4", None) for i in range(7)]
+    )
+    at = _oracle_pairs(rows, size, surfaces)
+    # the fixture sits on both boundaries: moving either cap by one in
+    # either direction changes the pair set
+    for s, c in ((size - 1, surfaces), (size + 1, surfaces),
+                 (size, surfaces - 1), (size, surfaces + 1)):
+        assert _oracle_pairs(rows, s, c) != at, (s, c)
+    _assert_sim_map_matches_oracle(spark, rows, size, surfaces)
 
 
 def test_fused_degenerate_surface_block_capped_by_default(spark, monkeypatch):
@@ -415,8 +475,8 @@ def test_fused_degenerate_surface_block_capped_by_default(spark, monkeypatch):
     # equal → diagonal short-circuit 1.0; number equal; unit both-null 1.0
     expect = W_LOCALITY + W_NUMBER + W_UNIT
     assert all(abs(s - expect) < 1e-12 for s in got.values())
-    # the exact (uncapped) map: distinct street pairs now score their true
-    # (sub-1.0) surface sims — every score strictly higher
+    # the map at the default surface cap (256 ≥ 5): distinct street pairs
+    # now score their true (sub-1.0) surface sims — every score strictly higher
     exact, _ = score_pairs_fused(addrs, heavy_threshold=2, sims=surface_sim_map(addrs))
     got_exact = {(r["uid_a"], r["uid_b"]): r["score"] for r in exact.collect()}
     assert got_exact.keys() == got.keys()
@@ -438,20 +498,18 @@ def test_fused_degenerate_surface_block_capped_by_default(spark, monkeypatch):
     assert u12["score"] == want < DEFAULT_TAU
 
 
-def test_memo_pairs_with_separator_bytes():
+def test_memo_pairs_with_separator_bytes(spark):
     """Surfaces containing \\x01 must not alias into the wrong pair.
 
     Round-2 advisor finding: the memoized kernels joined pair keys with
     \\x01 and split on the FIRST occurrence, so a surface containing \\x01
-    decoded into the wrong (a, b) pair. The production memo behind the sim
-    map pairs dictionary codes instead.
+    decoded into the wrong (a, b) pair. The sim map's kernel,
+    ``jw_pairs_table``, must score every pair exactly as the scalar oracle.
     """
-    import pyarrow as pa
-
-    from addressit_spark.scoring import _jw_dict_memo, jaro_winkler
+    from addressit_spark.scoring import jw_pairs_table
 
     a = ["A\x01B", "A", "X\x01", "", "MAIN ST"]
     b = ["C", "\x01BC", "\x01Y", "\x01", "MAIN\x01ST"]
-    got = _jw_dict_memo(pa.array(a), pa.array(b))
-    for i, (x, y) in enumerate(zip(a, b)):
-        assert got[i] == jaro_winkler(x, y), (x, y)
+    pairs = spark.createDataFrame(list(zip(a, b)), "a string, b string")
+    got = {(r["a"], r["b"]): r["jw"] for r in jw_pairs_table(pairs).collect()}
+    assert got == {(x, y): jaro_winkler(x, y) for x, y in zip(a, b)}

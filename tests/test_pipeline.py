@@ -504,6 +504,7 @@ def test_run_dedup_cli_resume_contract(tmp_path):
     import subprocess
     import sys
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
@@ -514,7 +515,7 @@ def test_run_dedup_cli_resume_contract(tmp_path):
             "--checkpoint-dir", ckpt, *extra,
         ]
         r = subprocess.run(
-            cmd, capture_output=True, text=True, timeout=420, cwd="/root/repo"
+            cmd, capture_output=True, text=True, timeout=420, cwd=repo
         )
         assert r.returncode == 0, r.stderr[-2000:]
         with open(out + "/metrics.json") as fh:

@@ -148,22 +148,29 @@ def test_choose_survivors_skew_friendly_plan(spark):
 
 def test_fused_scorer_pins_expanding_joins(spark):
     """The fused blocking+scoring plan (the 10^12-pair hot path) keeps its
-    three hint("merge")-pinned table×table joins as SortMergeJoin — the
-    salted pair expansion and the two sim-dim surface crosses — while the
-    designed broadcasts (8-byte-keyed sim lookups, block-stats sides) may
-    plan as BroadcastHashJoin. No cartesian/nested-loop, no row-at-a-time
-    Python anywhere."""
+    hint("merge")-pinned table×table join — the salted pair expansion on
+    ``(_bk, lo, hi)`` — as SortMergeJoin, while the designed broadcasts
+    (8-byte-keyed sim lookups) may plan as BroadcastHashJoin. The sim map it
+    builds inline has no join at all: one aggregation per block crosses
+    each block's surfaces in place. No cartesian/nested-loop, no
+    row-at-a-time Python anywhere."""
+    import re
+
     from addressit_spark.blocking import address_table
     from addressit_spark.parse_stage import parse_spans
-    from addressit_spark.scoring import score_pairs_fused
+    from addressit_spark.scoring import score_pairs_fused, surface_sim_map
     from addressit_spark.sources.corpus import documents_view, synth_corpus
 
     addrs = address_table(parse_spans(documents_view(synth_corpus(spark, 300, seed=42))))
     scored, _dropped = score_pairs_fused(addrs)
     plan = _plan(scored)
-    assert plan.count("SortMergeJoin") >= 3, plan[:2000]
+    assert re.search(r"SortMergeJoin \[_bk#\d+L, lo#\d+, hi#\d+\]", plan), plan[:2000]
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
+    sims = _plan(surface_sim_map(addrs))
+    for join in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin",
+                 "CartesianProduct", "ShuffledHashJoin"):
+        assert join not in sims, (join, sims[:2000])
 
 
 def test_embedding_near_dup_bucket_join_stays_smj(spark):
